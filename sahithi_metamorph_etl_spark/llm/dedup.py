@@ -165,6 +165,17 @@ def _rarefirst_hash_arrays(
     )
 
 
+def _check_jaccard_threshold(threshold: float) -> None:
+    """The Jaccard-cut contract shared by every verified near-dup path:
+    a threshold outside (0, 1] fails fast instead of silently changing
+    the output."""
+    if not 0.0 < threshold <= 1.0:
+        raise ValueError(
+            f"threshold must be in (0, 1] (got {threshold}): a Jaccard "
+            "similarity is a set-overlap ratio"
+        )
+
+
 def jaccard_pairs(
     df: DataFrame,
     text_col: str = "text",
@@ -230,14 +241,10 @@ def jaccard_pairs(
     the pinned partitions (same lifetime contract as
     ``operators.windows.global_rank``).
     """
-    if not 0.0 < threshold <= 1.0:
-        # threshold > 1 makes the prefix length negative (F.slice
-        # fails at job runtime); threshold <= 0 silently degenerates
-        # the prefix to the full index (quadratic candidate fan-out)
-        raise ValueError(
-            f"threshold must be in (0, 1] (got {threshold}): a Jaccard "
-            "similarity is a set-overlap ratio"
-        )
+    # threshold > 1 makes the prefix length negative (F.slice fails at
+    # job runtime); threshold <= 0 silently degenerates the prefix to
+    # the full index (quadratic candidate fan-out)
+    _check_jaccard_threshold(threshold)
     arr = _rarefirst_hash_arrays(df, text_col, id_col, n, max_shingle_freq)
     # prefix = first n - ceil(t*n) + 1 elements (the epsilon guards
     # the integer boundary of the float product: errors can only
@@ -636,12 +643,11 @@ def neardup_against_seen(
     freed-with-the-session rationale only holds for one-shot batch
     jobs.
 
-    THRESHOLD > 0 is assumed (ADVICE_r21 note): the array_intersect
-    verify form keeps zero-overlap candidate pairs until the
-    ``jac >= threshold`` filter, so at ``threshold <= 0.0`` it would
-    emit jaccard-0 collision pairs the former overlap-join form
-    dropped. Every shipped caller uses 0.8; a <= 0 threshold is not a
-    meaningful near-dup cut.
+    A threshold outside (0, 1] raises ``ValueError`` (the
+    :func:`jaccard_pairs` contract): the array_intersect verify form
+    keeps zero-overlap candidate pairs until the ``jac >= threshold``
+    filter, so a <= 0 cut would emit jaccard-0 collision pairs, and a
+    cut above 1 can never match.
 
     ``new_sigs`` (an (id, band, sig) frame for exactly ``new_df``,
     i.e. ``band_signature_store(new_df, ...)`` at the SAME
@@ -651,6 +657,7 @@ def neardup_against_seen(
     shingle+minhash pass then runs ONCE per batch, not twice."""
     from pyspark import StorageLevel
 
+    _check_jaccard_threshold(threshold)
     if new_sigs is None:
         new_sigs = band_signature_store(new_df, text_col, id_col, n, num_perm, bands)
     seen = seen_bands.select(
@@ -738,14 +745,12 @@ def minhash_lsh_pairs(
     With 64 perms / 16 bands x 4 rows, the candidate probability for
     jaccard s is 1-(1-s^4)^16 (~0.99 at s=0.8, ~0.07 at s=0.3). If
     ``verify``, candidates are re-scored with exact Jaccard and filtered
-    — output schema matches :func:`jaccard_pairs`. THRESHOLD > 0 is
-    assumed (ADVICE_r21 note, same as :func:`neardup_against_seen`):
-    at ``threshold <= 0.0`` the array_intersect verify form would keep
-    zero-overlap banded collisions the former overlap-join form
-    dropped; every shipped caller uses 0.8.
+    — output schema matches :func:`jaccard_pairs`. A threshold outside
+    (0, 1] raises ``ValueError``, as in :func:`neardup_against_seen`.
     """
     from pyspark import StorageLevel
 
+    _check_jaccard_threshold(threshold)
     band_sigs = band_signature_store(df, text_col, id_col, n, num_perm, bands)
     # consumed by both sides of the band self-join — persist the tiny
     # signature table so the scoring pass runs once

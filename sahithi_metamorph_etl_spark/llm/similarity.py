@@ -1,22 +1,31 @@
 """Embedding similarity search.
 
-- ``cosine_topk_bruteforce``: exact top-k for a bounded query set —
-  O(|queries| x |corpus|), the correctness baseline. All arithmetic in
-  double with a deterministic left-to-right fold (``F.aggregate``), so
-  results are bit-comparable to an external oracle.
-- ``hyperplane_lsh_topk``: the scale path — random-hyperplane LSH
-  (sign-bit bucketing) so each query only scores its bucket. Planes are
-  seeded deterministically; recall/bucket-size trade-off via n_planes.
+- ``cosine_topk_bruteforce`` / ``hard_negative_topk``: exact top-k for a
+  bounded query set — O(|queries| x |corpus|), the correctness baseline.
+- ``hyperplane_lsh_topk``: random-hyperplane LSH (sign-bit bucketing,
+  optional multi-probe) so each query only scores its bucket; pure JVM
+  higher-order array expressions, no UDF.
+- The ANN family — three code tables (float, SQ8, PQ) with an optional
+  IVF coarse stage — in two forms each: the in-memory flat scan
+  (``ivf_topk``, ``pq_topk``, ``sq8_topk``) and the materialized index
+  (``*_build_index`` + ``*_search``). All nine entry points share ONE
+  scan kernel (:func:`_topk_scorer`), one code table per family
+  (:class:`_FloatCode`, :class:`_SQ8Code`, :class:`_PQCode`), one
+  coarse stage (:class:`_Coarse`), one build (:func:`_build_index`) and
+  one search (:func:`_search`), so a physical search equals its flat
+  twin by construction.
 
-At 100 TB the corpus side stays partitioned; the bounded query set is
-broadcast. Neither operator needs a UDF — dot products are higher-order
-array expressions (JVM codegen).
+Every ordering key is rounded half-away-from-zero before compare
+(:func:`_nround`, the ``dround`` twin) and ties break by id, so results
+are reproducible across engines and partition layouts. At 100 TB the
+corpus stays partitioned; only the bounded query set is collected.
 """
 
 from __future__ import annotations
 
 import random
 
+import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -58,36 +67,61 @@ def _dround_once(c: Column, scale: int = 8) -> Column:
 def _nround(t, scale: int = 8):
     """numpy twin of functions.money.dround (half-away-from-zero via
     sign/abs/floor — bit-identical in any engine evaluating the same
-    double). Every ANN ordering key — cos_sim, ADC, and since r10 the
-    IVF assignment/probe argmax, PQ encode argmin and LSH sign bit —
-    rounds through this before compare, so oracle determinism never
+    double; ``np.round`` is half-to-even and can disagree with the
+    oracle on .5 ties). Every ANN ordering key — cos_sim, ADC, the IVF
+    assignment/probe argmax, the PQ encode argmin and the LSH sign bit
+    — rounds through this before compare, so oracle determinism never
     rides on bit-identical unrounded accumulation (BLAS vs DuckDB
     list_dot_product can differ by an ulp on near-ties)."""
-    import numpy as np
-
     f = float(10**scale)
     return np.sign(t) * np.floor(np.abs(t) * f + 0.5) / f
 
 
+def _np_unit(m):
+    """Unit rows of a (rows, dim) float64 matrix; zero rows clamp like
+    ``_norm`` (0/eps = 0)."""
+    return m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
+
+
+def _np_unit_rounded(m):
+    """The 8dp-rounded unit vectors of a (rows, dim) float64 matrix,
+    accumulating the norm STRICTLY left-to-right via ``np.cumsum`` —
+    the exact IEEE op sequence of both the JVM ``F.aggregate`` fold
+    (`_dot`) and DuckDB's ``list_dot_product``, so every downstream
+    SQ8 code is bit-identical across engines (a plain ``.sum()`` would
+    pairwise-accumulate and could differ by an ulp on the 8dp
+    boundary; equality with the JVM fold is pinned in tests). Zero
+    vectors clamp like ``_norm``."""
+    n2 = np.cumsum(m * m, axis=1)[:, -1]
+    norm = np.maximum(np.sqrt(n2), 1e-12)
+    return _nround(m / norm[:, None])
+
+
 def _local_sidecar_path(path: str) -> str:
-    """Enforce the index-path sidecar contract (ADVICE_r21): the
-    pyarrow sidecar fast path does driver-local POSIX I/O, while the
-    data files (codes/lists) in the SAME ``index_path`` go through
-    Spark's Hadoop FS layer. On a non-local ``index_path`` (hdfs://,
-    s3a://, ...) the index would silently split across storage
-    systems — fail fast with the contract instead. ``file:`` URIs are
-    accepted and stripped to their POSIX path so both layers resolve
-    to the same files."""
+    """Enforce the index-path sidecar contract: the pyarrow sidecar
+    fast path does driver-local POSIX I/O, while the data files
+    (codes/lists) in the SAME ``index_path`` go through Spark's Hadoop
+    FS layer. A non-local ``index_path`` (``hdfs://``, ``s3a:/``, a
+    ``file://`` URI naming another host, ...) would silently split the
+    index across storage systems — fail fast with the contract
+    instead. Local ``file:`` URIs (``file:/p``, ``file:///p``,
+    ``file://localhost/p``) resolve to the POSIX path ``/p`` so both
+    layers see the same files."""
     import re
 
-    m = re.match(r"^([a-zA-Z][a-zA-Z0-9+.-]*)://(.*)$", path)
+    m = re.match(r"^([a-zA-Z][a-zA-Z0-9+.-]+):(/.*)$", path)
     if m is None:
         return path
-    if m.group(1) == "file":
-        return "/" + m.group(2).lstrip("/")
+    scheme, rest = m.groups()
+    if scheme == "file":
+        if not rest.startswith("//"):
+            return rest
+        host, _, tail = rest[2:].partition("/")
+        if host in ("", "localhost"):
+            return "/" + tail.lstrip("/")
     raise ValueError(
         f"index sidecars use driver-local pyarrow I/O, but index_path "
-        f"{path!r} has scheme {m.group(1)!r}: build the index on a "
+        f"{path!r} is not a local path: build the index on a "
         "driver-local path (or mount), then publish it to the remote "
         "filesystem as a unit — a remote index_path would silently "
         "write sidecars locally while the codes go to the remote FS"
@@ -97,14 +131,12 @@ def _local_sidecar_path(path: str) -> str:
 def _sidecar_write(path: str, columns: dict, schema) -> None:
     """Write a TINY index sidecar (centroids / minmax / codebooks —
     metadata-sized, driver-resident by construction) as one parquet
-    file directly with pyarrow, replacing the former
-    ``createDataFrame(...).repartition(1).write.parquet`` round-trip
-    (r21: one Spark job + commit protocol per sidecar was pure
-    overhead at any scale — these tables are k x dim doubles the
-    driver already holds). Same overwrite semantics as the Spark
-    writer (the directory is replaced); the file is plain parquet,
-    readable by ``spark.read.parquet`` or any engine. Driver-local
-    paths only (:func:`_local_sidecar_path`)."""
+    file directly with pyarrow: no Spark job or commit protocol for
+    tables the driver already holds. Same overwrite semantics as the
+    Spark writer (the directory is replaced); the file is plain
+    parquet, readable by ``spark.read.parquet`` or any engine.
+    Driver-local paths only (:func:`_local_sidecar_path`)."""
+    import os
     import shutil
 
     import pyarrow as pa
@@ -112,11 +144,8 @@ def _sidecar_write(path: str, columns: dict, schema) -> None:
 
     path = _local_sidecar_path(path)
     shutil.rmtree(path, ignore_errors=True)
-    import os
-
     os.makedirs(path, exist_ok=True)
-    table = pa.table(columns, schema=schema)
-    pq.write_table(table, f"{path}/part-00000.parquet")
+    pq.write_table(pa.table(columns, schema=schema), f"{path}/part-00000.parquet")
 
 
 def _sidecar_rows(path: str) -> list[dict]:
@@ -124,8 +153,7 @@ def _sidecar_rows(path: str) -> list[dict]:
     pyarrow — the driver-side twin of ``spark.read.parquet(...).
     collect()`` for metadata-sized tables (no Spark job). Reads every
     ``*.parquet`` part file, so sidecars written by either the pyarrow
-    or the Spark writer load identically. Driver-local paths only
-    (:func:`_local_sidecar_path`)."""
+    or the Spark writer load identically."""
     import glob as _glob
 
     import pyarrow.parquet as pq
@@ -162,98 +190,500 @@ def _bounded_query_rows(
         if len(rows) > max_queries:
             raise ValueError(
                 f"{op_name}: query set exceeds max_queries={max_queries}; "
-                "tighten query_filter or raise the cap deliberately"
+                "tighten the query set or raise the cap deliberately"
             )
         return rows
     return q.collect()
 
 
+_TOPK_SCHEMA = "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
 
-def _topk_scorer(q_ids, qm, k, rf, exclude_self=True, q_labels=None):
-    """Shared ``mapInPandas`` scorer for the bounded-query BLAS top-k
-    scan (:func:`cosine_topk_bruteforce` / :func:`hard_negative_topk`):
-    per-partition heaps of the best (cos, neighbor) per query, each
-    Arrow batch scored by one matmul, candidates rounded half-away
-    BEFORE compare. With ``q_labels`` the corpus frame must also carry
-    the neighbor label as ``nl``: same-label columns are masked out
-    vectorized (hard negatives — the self row masks for free) and the
-    label rides through the heap into the output. The returned closure
-    is self-contained (pickles by value; no package refs)."""
+
+def _empty_topk(spark, labels: bool = False) -> DataFrame:
+    schema = (
+        "vec_id bigint, rank int, neighbor_id bigint, neighbor_label int, cos_sim double"
+        if labels
+        else _TOPK_SCHEMA
+    )
+    return spark.createDataFrame([], schema)
+
+
+def _rank_topk(scored: DataFrame, k: int, *carry: str) -> DataFrame:
+    """The final (cos_sim desc, neighbor_id asc) top-k window, ranked."""
+    return top_k_per_group(
+        scored,
+        partition_by=["vec_id"],
+        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
+        k=k,
+        rank_col="rank",
+        keep_rank=True,
+    ).select(
+        "vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", *carry, "cos_sim"
+    )
+
+
+def _topk_scorer(
+    q_ids, keep, score_batch, q_probes=None, exclude_self=True,
+    q_labels=None, score_col="cos_sim",
+):
+    """THE per-partition scan kernel of every bounded-query top-k —
+    brute force, hard negatives, and the flat and physical IVF / PQ /
+    SQ8 forms — as a ``mapInPandas`` function.
+
+    ``score_batch(pdf)`` turns one Arrow batch into (neighbor ids,
+    (queries x rows) ROUNDED scores, list ids or ``None``); the family
+    arithmetic lives there. The kernel keeps a min-heap of the best
+    ``keep`` (score, neighbor) per query: only rows that can beat (or
+    tie) the worst kept candidate enter the Python loop, and with
+    ``q_probes`` only rows whose list id is among that query's probed
+    lists; with ``q_labels`` the corpus frame also carries the
+    neighbor label as ``nl``, same-label rows are masked out (hard
+    negatives) and the label rides through the heap into the output.
+    Ties break by lower neighbor id, so each partition emits exactly
+    its top-``keep`` under (score desc, neighbor asc) and any global
+    cut over the emitted rows is partition-independent."""
 
     def score_partition(batches):
         import heapq
 
-        import numpy as np
         import pandas as pd
 
         heaps = {int(qid): [] for qid in q_ids}
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            t = qm @ cm.T
-            # half-AWAY-from-zero (functions.money.dround twin): np.round
-            # is half-to-even and can disagree with the oracle on .5 ties
-            sims = np.sign(t) * np.floor(np.abs(t) * rf + 0.5) / rf
-            nids = pdf["neighbor_id"].to_numpy()
-            nlabels = pdf["nl"].to_numpy() if q_labels is not None else None
+            nids, scores, lids = score_batch(pdf)
+            nlabels = None if q_labels is None else pdf["nl"].to_numpy()
             for qi, qid in enumerate(q_ids):
                 heap = heaps[int(qid)]
-                s = sims[qi]
-                # vectorized prefilter: only items that can beat (or tie)
-                # the worst kept candidate — and, under a label mask,
-                # carry a DIFFERENT label — enter the Python loop
-                if q_labels is not None:
-                    elig = nlabels != q_labels[qi]
-                    if len(heap) >= k:
-                        elig &= s >= heap[0][0]
-                    idxs = np.nonzero(elig)[0]
-                elif len(heap) >= k:
-                    idxs = np.nonzero(s >= heap[0][0])[0]
-                else:
-                    idxs = range(len(nids))
-                for ci in idxs:
+                s = scores[qi]
+                # a heap not yet full admits any score >= -2.0 (every cosine)
+                elig = s >= (heap[0][0] if len(heap) >= keep else -2.0)
+                if q_probes is not None:
+                    elig &= np.isin(lids, q_probes[qi])
+                if nlabels is not None:
+                    elig &= nlabels != q_labels[qi]
+                for ci in np.nonzero(elig)[0]:
                     nid = int(nids[ci])
                     if exclude_self and nid == qid:
                         continue
-                    # min-heap keyed (cos asc, neighbor desc): root is the
-                    # WORST kept candidate under (cos desc, neighbor asc);
-                    # nid is unique so a trailing label never compares
-                    item = (
-                        (float(s[ci]), -nid)
-                        if nlabels is None
-                        else (float(s[ci]), -nid, int(nlabels[ci]))
+                    # min-heap keyed (score asc, neighbor desc): the root
+                    # is the WORST kept candidate; nid is unique, so a
+                    # trailing label never compares
+                    item = (float(s[ci]), -nid) + (
+                        () if nlabels is None else (int(nlabels[ci]),)
                     )
-                    if len(heap) < k:
+                    if len(heap) < keep:
                         heapq.heappush(heap, item)
                     elif item > heap[0]:
                         heapq.heapreplace(heap, item)
-        if q_labels is None:
-            out = [
-                (int(qid), -it[1], it[0])
-                for qid, heap in heaps.items()
-                for it in heap
-            ]
-            yield pd.DataFrame(
-                out, columns=["vec_id", "neighbor_id", "cos_sim"]
-            ).astype(
-                {"vec_id": "int64", "neighbor_id": "int64", "cos_sim": "float64"}
-            )
-        else:
-            out = [
-                (int(qid), -it[1], it[2], it[0])
-                for qid, heap in heaps.items()
-                for it in heap
-            ]
-            yield pd.DataFrame(
-                out, columns=["vec_id", "neighbor_id", "neighbor_label", "cos_sim"]
-            ).astype(
-                {"vec_id": "int64", "neighbor_id": "int64",
-                 "neighbor_label": "int32", "cos_sim": "float64"}
-            )
+        cols = ["vec_id", "neighbor_id"] + (
+            [] if q_labels is None else ["neighbor_label"]
+        ) + [score_col]
+        dtypes = {"vec_id": "int64", "neighbor_id": "int64",
+                  "neighbor_label": "int32", score_col: "float64"}
+        out = [
+            (qid, -it[1], *it[2:], it[0]) for qid, heap in heaps.items() for it in heap
+        ]
+        yield pd.DataFrame(out, columns=cols).astype({c: dtypes[c] for c in cols})
 
     return score_partition
+
+
+class _FloatCode:
+    """Float code table (brute force and IVF-flat): rows are kept as the
+    raw float vectors (the ``embedding`` column under ``lists/``) and
+    score by the exact cosine of the ``np.linalg.norm`` unit vectors,
+    rounded at ``round_scale``. Ranked directly — no re-rank stage."""
+
+    quantized = False
+    data_dir, col, col_type = "lists", "embedding", "array<double>"
+
+    def encode(self, raw):
+        return raw
+
+    def scorer(self, qvecs, round_scale):
+        qm = _np_unit(qvecs)
+        return lambda codes: _nround(qm @ _np_unit(codes).T, round_scale)
+
+    def save(self, index_path) -> None:
+        pass
+
+    @classmethod
+    def load(cls, index_path):
+        return cls()
+
+    @staticmethod
+    def to_cells(codes):
+        return list(codes)
+
+    @staticmethod
+    def from_cells(cells):
+        return np.array(list(cells), dtype=np.float64)
+
+
+class _QuantizedCode:
+    """Shared storage of the byte codes (SQ8, PQ): one ``binary`` cell
+    per vector under ``codes/``, decoded by a single ``np.frombuffer``
+    per Arrow batch. Quantized scans rank candidates by a 6dp-rounded
+    ADC score and re-rank the global top-(k+rerank) exactly
+    (:func:`_adc_exact_rerank`)."""
+
+    quantized = True
+    data_dir, col, col_type = "codes", "codes", "binary"
+
+    @staticmethod
+    def to_cells(codes):
+        return [row.tobytes() for row in codes.astype(np.uint8)]
+
+    @staticmethod
+    def from_cells(cells):
+        return np.frombuffer(b"".join(cells), dtype=np.uint8).reshape(len(cells), -1)
+
+
+class _SQ8Code(_QuantizedCode):
+    """SQ8 code table: per-dimension affine min/max quantization of the
+    rounded unit values (:func:`_np_unit_rounded`) to one byte per
+    dimension, ``code_d = floor((u_d - mn_d) / (mx_d - mn_d) * 255 +
+    0.5)`` (code 0 on constant dims); scores by the dot of the rounded
+    unit query with the dequantized row ``mn + code * (mx - mn) / 255``.
+    The min/max sidecar is ``minmax`` (dim rows)."""
+
+    def __init__(self, mn, mx):
+        self.mn, self.mx = mn, mx
+        self.span = mx - mn
+
+    @classmethod
+    def fit(cls, embeddings, id_col, vec_col):
+        return cls(*_sq8_dim_stats(embeddings, id_col, vec_col))
+
+    def encode(self, raw):
+        um = _np_unit_rounded(raw)
+        nz = self.span > 0
+        codes = np.zeros_like(um)
+        codes[:, nz] = np.floor((um[:, nz] - self.mn[nz]) / self.span[nz] * 255.0 + 0.5)
+        return codes
+
+    def scorer(self, qvecs, round_scale):
+        qn, mn, scale = _np_unit_rounded(qvecs), self.mn, self.span / 255.0
+        return lambda codes: _nround(qn @ (mn + codes * scale).T, 6)
+
+    @staticmethod
+    def budget(n_scanned: int) -> int:
+        return _auto_rerank_budget(n_scanned)
+
+    def save(self, index_path) -> None:
+        import pyarrow as pa
+
+        _sidecar_write(
+            f"{index_path}/minmax",
+            {"pos": list(range(len(self.mn))), "mn": [float(v) for v in self.mn],
+             "mx": [float(v) for v in self.mx]},
+            pa.schema([("pos", pa.int32()), ("mn", pa.float64()), ("mx", pa.float64())]),
+        )
+
+    @classmethod
+    def load(cls, index_path):
+        rows = _sidecar_rows(f"{index_path}/minmax")
+        mn, mx = np.zeros(len(rows)), np.zeros(len(rows))
+        for r in rows:
+            mn[r["pos"]], mx[r["pos"]] = r["mn"], r["mx"]
+        return cls(mn, mx)
+
+
+class _PQCode(_QuantizedCode):
+    """PQ code table: ``m`` contiguous subspaces, each encoded to its
+    nearest of ``ksub`` codebook entries — argmin of the 8dp-ROUNDED L2
+    distance of the unit subvector, first index (= lowest code) on ties;
+    scores by ADC: the sum over subspaces of the query-subvector dot
+    with the coded entry, via per-query (m x ksub) lookup tables. The
+    codebook sidecar is ``books`` (m*ksub rows)."""
+
+    def __init__(self, books):
+        self.books = books
+
+    @classmethod
+    def fit(cls, embeddings, id_col, vec_col, m, ksub, seed, train_sample, books=None):
+        if books is None:
+            return cls(_train_pq_codebooks(embeddings, id_col, vec_col, m, ksub, seed, train_sample))
+        books = np.asarray(books, dtype=np.float64)
+        if books.shape[0] != m or books.shape[1] != ksub:
+            raise ValueError(f"books shape {books.shape} != (m={m}, ksub={ksub}, dsub)")
+        return cls(books)
+
+    def encode(self, raw):
+        m, _, dsub = self.books.shape
+        sub = _np_unit(raw).reshape(len(raw), m, dsub)
+        codes = np.empty((len(raw), m), dtype=np.int64)
+        for j in range(m):
+            d2 = ((sub[:, j, None, :] - self.books[None, j]) ** 2).sum(axis=2)
+            codes[:, j] = _nround(np.sqrt(d2)).argmin(axis=1)
+        return codes
+
+    def scorer(self, qvecs, round_scale):
+        m, _, dsub = self.books.shape
+        qm = _np_unit(qvecs)
+        tables = np.einsum("qjd,jkd->qjk", qm.reshape(len(qm), m, dsub), self.books)
+        js = np.arange(m)
+        return lambda codes: _nround(
+            np.stack([t[js, codes].sum(axis=1) for t in tables]), 6
+        )
+
+    @staticmethod
+    def budget(n_scanned: int) -> int:
+        return _auto_rerank_budget(n_scanned, floor=128)
+
+    def save(self, index_path) -> None:
+        import pyarrow as pa
+
+        m, ksub, _ = self.books.shape
+        _sidecar_write(
+            f"{index_path}/books",
+            {"j": [j for j in range(m) for _ in range(ksub)],
+             "cid": [c for _ in range(m) for c in range(ksub)],
+             "bv": [[float(v) for v in self.books[j, c]] for j in range(m) for c in range(ksub)]},
+            pa.schema([("j", pa.int32()), ("cid", pa.int32()), ("bv", pa.list_(pa.float64()))]),
+        )
+
+    @classmethod
+    def load(cls, index_path):
+        rows = _sidecar_rows(f"{index_path}/books")
+        m = max(r["j"] for r in rows) + 1
+        ksub = max(r["cid"] for r in rows) + 1
+        books = np.zeros((m, ksub, len(rows[0]["bv"])), dtype=np.float64)
+        for r in rows:
+            books[r["j"], r["cid"]] = r["bv"]
+        return cls(books)
+
+
+def _train_centroids(embeddings, vec_col, n_lists, seed, train_sample):
+    """Seeded k-means coarse quantizer: a few Lloyd iterations on cosine
+    (unit vectors -> dot argmax) over a bounded driver sample. Returns a
+    unit-normalized (n_lists, dim) ndarray — small enough to ship into
+    closures by value."""
+    rng = np.random.default_rng(seed)
+    sample = embeddings.select(F.col(vec_col)).limit(train_sample).collect()
+    xs = _np_unit(np.array([r[0] for r in sample], dtype=np.float64))
+    cents = xs[rng.choice(len(xs), size=min(n_lists, len(xs)), replace=False)]
+    for _ in range(5):
+        assign = (xs @ cents.T).argmax(axis=1)
+        for j in range(len(cents)):
+            members = xs[assign == j]
+            if len(members):
+                c = members.mean(axis=0)
+                cents[j] = c / max(np.linalg.norm(c), 1e-12)
+    return cents
+
+
+class _Coarse:
+    """The IVF coarse stage shared by every family: centroids (seeded
+    k-means, or passed in by the caller — e.g. seed vectors an external
+    oracle can replay exactly), the list assignment, and the per-query
+    probe ranking. Assignment and probing both rank the ROUNDED dot of
+    the unit vector with the centroids, lowest ``list_id`` on ties
+    (first-index argmax / stable argsort), matching the oracle's
+    (dot DESC, list_id) window. The centroid sidecar is ``centroids``."""
+
+    def __init__(self, cents):
+        self.cents = np.asarray(cents, dtype=np.float64)
+
+    @classmethod
+    def fit(cls, embeddings, vec_col, n_lists, seed, train_sample, centroids=None):
+        if centroids is None:
+            centroids = _train_centroids(embeddings, vec_col, n_lists, seed, train_sample)
+        return cls(centroids)
+
+    def assign(self, raw):
+        return _nround(_np_unit(raw) @ self.cents.T).argmax(axis=1).astype("int32")
+
+    def probes(self, qvecs, n_probe):
+        """(queries, n_probe) list ids: each query's nearest lists."""
+        ranked = np.argsort(-_nround(_np_unit(qvecs) @ self.cents.T), axis=1, kind="stable")
+        return ranked[:, :n_probe]
+
+    @staticmethod
+    def prune(corpus: DataFrame, q_probes) -> DataFrame:
+        """Push the probe UNION into the scan: on a list-partitioned
+        index ``list_id IN (...)`` is a partition filter, so non-probed
+        list directories are never opened (plan-asserted in tests)."""
+        return corpus.filter(F.col("list_id").isin(sorted({int(p) for p in np.ravel(q_probes)})))
+
+    def save(self, index_path) -> None:
+        import pyarrow as pa
+
+        _sidecar_write(
+            f"{index_path}/centroids",
+            {"list_id": list(range(len(self.cents))),
+             "centroid": [[float(v) for v in row] for row in self.cents]},
+            pa.schema([("list_id", pa.int32()), ("centroid", pa.list_(pa.float64()))]),
+        )
+
+    @classmethod
+    def load(cls, index_path):
+        rows = _sidecar_rows(f"{index_path}/centroids")
+        cents = np.zeros((len(rows), len(rows[0]["centroid"])))
+        for r in rows:
+            cents[r["list_id"]] = r["centroid"]
+        return cls(cents)
+
+
+def _scan_topk(
+    corpus, score_batch, qrows, k, code, rerank, float_corpus, id_col,
+    vec_col, round_scale, q_probes=None, exclude_self=True, q_labels=None,
+):
+    """Kernel scan + the final ranking. Float codes rank the scanned
+    cosines directly; quantized codes cut the global ADC
+    top-(k+rerank) — partition-independent, since every partition heap
+    holds a superset of its share of that list — and re-rank the
+    survivors exactly, so quantization only ever chooses candidates,
+    never reported scores."""
+    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
+    keep = k + rerank if code.quantized else k
+    score_col = "adc" if code.quantized else "cos_sim"
+    label = "" if q_labels is None else "neighbor_label int, "
+    cands = corpus.mapInPandas(
+        _topk_scorer(q_ids, keep, score_batch, q_probes, exclude_self, q_labels, score_col),
+        schema=f"vec_id bigint, neighbor_id bigint, {label}{score_col} double",
+    )
+    if not code.quantized:
+        return _rank_topk(cands, k, *(() if q_labels is None else ("neighbor_label",)))
+    cut = top_k_per_group(
+        cands,
+        partition_by=["vec_id"],
+        order_by=[F.col("adc").desc(), F.col("neighbor_id").asc()],
+        k=keep,
+    )
+    return _adc_exact_rerank(
+        corpus.sparkSession, cut, qrows, float_corpus, id_col, vec_col, k,
+        round_scale, cand_bound=len(qrows) * keep,
+    )
+
+
+def _flat_topk(
+    embeddings, fit_code, k, query_filter, id_col, vec_col, round_scale,
+    max_queries, op_name, rerank=0, coarse=None, n_probe=None, queries=None,
+    exclude_self=True, label_col=None,
+):
+    """The in-memory form of every family: collect the bounded queries,
+    fit the code table (``fit_code()``, after the empty check, so an
+    empty corpus never reaches training), then scan the corpus once,
+    encoding each Arrow batch in-scan (and assigning its coarse list,
+    with ``coarse``) before the kernel scores it. No index is written.
+    ``queries`` takes the query set from another frame; ``label_col``
+    masks same-label neighbors (hard negatives)."""
+    qrows = _bounded_query_rows(
+        queries if queries is not None else embeddings, id_col, vec_col,
+        query_filter, max_queries, op_name,
+        extra_cols=() if label_col is None else (label_col,),
+    )
+    if not qrows:
+        return _empty_topk(embeddings.sparkSession, labels=label_col is not None)
+    q_labels = None
+    if label_col is not None:
+        if any(r[2] is None for r in qrows):
+            raise ValueError(
+                f"{op_name}: null {label_col!r} among query rows — the "
+                "different-label mask is undefined for null labels; "
+                "filter or impute them first"
+            )
+        q_labels = [int(r[2]) for r in qrows]
+    code = fit_code()
+    qvecs = np.array([r[1] for r in qrows], dtype=np.float64)
+    score = code.scorer(qvecs, round_scale)
+
+    def score_batch(pdf):
+        raw = np.array(list(pdf["cv"]), dtype=np.float64)
+        lids = None if coarse is None else coarse.assign(raw)
+        return pdf["neighbor_id"].to_numpy(), score(code.encode(raw)), lids
+
+    corpus = embeddings.select(
+        F.col(id_col).alias("neighbor_id"),
+        *([] if label_col is None else [F.col(label_col).alias("nl")]),
+        F.col(vec_col).cast("array<double>").alias("cv"),
+    )
+    return _scan_topk(
+        corpus, score_batch, qrows, k, code, rerank, embeddings, id_col, vec_col,
+        round_scale, q_probes=None if coarse is None else coarse.probes(qvecs, n_probe),
+        exclude_self=exclude_self, q_labels=q_labels,
+    )
+
+
+def _build_index(embeddings, index_path, code, coarse, id_col, vec_col) -> None:
+    """Materialize a family's physical layout: the code sidecar, the
+    centroid sidecar (IVF), and one Arrow encode pass writing
+    (vec_id, codes) — the rows the flat form encodes in-scan, bit for
+    bit — under ``{index_path}/{code.data_dir}``, PARTITIONED BY
+    ``list_id`` when ``coarse`` is given (one directory per inverted
+    list, so a probe reads only the probed lists' files). No shuffle
+    beyond the partitioned write."""
+    code.save(index_path)
+    if coarse is not None:
+        coarse.save(index_path)
+
+    def encode(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            raw = np.array(list(pdf["embedding"]), dtype=np.float64)
+            out = {"vec_id": pdf["vec_id"].to_numpy(), code.col: code.to_cells(code.encode(raw))}
+            if coarse is not None:
+                out["list_id"] = coarse.assign(raw)
+            yield pd.DataFrame(out)
+
+    schema = f"vec_id bigint, {code.col} {code.col_type}"
+    writer = (
+        embeddings.select(
+            F.col(id_col).cast("bigint").alias("vec_id"),
+            F.col(vec_col).cast("array<double>").alias("embedding"),
+        )
+        .mapInPandas(encode, schema=schema + ("" if coarse is None else ", list_id int"))
+        .write.mode("overwrite")
+    )
+    if coarse is not None:
+        writer = writer.partitionBy("list_id")
+    writer.parquet(f"{index_path}/{code.data_dir}")
+
+
+def _search(
+    spark, index_path, queries, embeddings, code_cls, k, rerank, id_col,
+    vec_col, round_scale, max_queries, n_probe, op_name,
+):
+    """The physical form of every family: load the sidecars, collect the
+    bounded queries, probe (list-partitioned index: each query's
+    ``n_probe`` nearest lists, default 4, the union pushed into the
+    scan as a partition filter), resolve ``rerank=None`` from the
+    PROBED row count, and scan the stored codes with the kernel — each
+    query keeps only rows of its own probed lists (the stored
+    ``list_id``; no re-assignment at search time)."""
+    code = code_cls.load(index_path)
+    qrows = _bounded_query_rows(queries, id_col, vec_col, None, max_queries, op_name)
+    if not qrows:
+        return _empty_topk(spark)
+    qvecs = np.array([r[1] for r in qrows], dtype=np.float64)
+    corpus = spark.read.parquet(f"{index_path}/{code.data_dir}")
+    q_probes = None
+    if "list_id" in corpus.columns:
+        q_probes = _Coarse.load(index_path).probes(qvecs, 4 if n_probe is None else n_probe)
+        corpus = _Coarse.prune(corpus, q_probes)
+    elif n_probe is not None:
+        raise ValueError(
+            f"{op_name}: n_probe given but the index has no list_id partitions "
+            f"— rebuild with {op_name.replace('search', 'build_index')}(n_lists=...)"
+        )
+    if rerank is None:
+        rerank = code.budget(corpus.count())
+    score = code.scorer(qvecs, round_scale)
+
+    def score_batch(pdf):
+        lids = None if q_probes is None else pdf["list_id"].to_numpy()
+        return pdf["vec_id"].to_numpy(), score(code.from_cells(pdf[code.col])), lids
+
+    return _scan_topk(
+        corpus, score_batch, qrows, k, code, rerank, embeddings, id_col, vec_col,
+        round_scale, q_probes=q_probes,
+    )
 
 
 def cosine_topk_bruteforce(
@@ -290,34 +720,11 @@ def cosine_topk_bruteforce(
     ``cos_sim`` is rounded (default 8dp) BEFORE ranking with a
     neighbor-id tie-break, so ordering is reproducible across engines.
     """
-    import numpy as np
-
-    qrows = _bounded_query_rows(
-        queries if queries is not None else embeddings,
-        id_col, vec_col, query_filter, max_queries, "cosine_topk_bruteforce",
+    return _flat_topk(
+        embeddings, _FloatCode, k, query_filter, id_col, vec_col, round_scale,
+        max_queries, "cosine_topk_bruteforce", queries=queries,
+        exclude_self=exclude_self,
     )
-    if not qrows:
-        schema = "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        return embeddings.sparkSession.createDataFrame([], schema)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-
-    rf = float(10**round_scale)
-    corpus = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-
-    candidates = corpus.mapInPandas(
-        _topk_scorer(q_ids, qm, k, rf, exclude_self=exclude_self),
-        schema="vec_id bigint, neighbor_id bigint, cos_sim double",
-    )
-    return top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select("vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "cos_sim")
 
 
 def hard_negative_topk(
@@ -335,17 +742,12 @@ def hard_negative_topk(
     whose ``label_col`` DIFFERS from the query's — the classic
     "hardest negatives" batch-construction step for embedding-model
     training. Returns (vec_id, rank, neighbor_id, neighbor_label,
-    cos_sim); reference parity: the reference has no ANN surface, this
-    extends the training-data family per SURVEY §2.
+    cos_sim).
 
-    Scale design: identical to :func:`cosine_topk_bruteforce` — the
-    bounded query set ships inside the scoring closure as a
-    unit-normalized float64 matrix PLUS a label vector; the corpus
-    never leaves its partitions, each Arrow batch is scored by one BLAS
-    matmul with the same-label columns masked out vectorized, and the
-    shuffle carries only ``partitions x |queries| x k`` candidates into
-    the final global window. The self-row is excluded for free (it
-    always shares the query's label).
+    Scale design: identical to :func:`cosine_topk_bruteforce`, plus a
+    query label vector in the scoring closure; same-label columns are
+    masked out vectorized per Arrow batch and the self-row is excluded
+    for free (it always shares the query's label).
 
     Label contract: ``label_col`` must be an INTEGRAL column
     (byte/short/int/long) with no nulls among the queries — the output
@@ -353,12 +755,7 @@ def hard_negative_topk(
     vectors. A non-integer label column raises ``ValueError`` up front
     (map string labels through a dictionary join first); a null query
     label raises ``ValueError`` at plan construction.
-
-    ``cos_sim`` is rounded (default 8dp) BEFORE ranking with a
-    neighbor-id tie-break, so ordering is reproducible across engines.
     """
-    import numpy as np
-
     from pyspark.sql.types import ByteType, IntegerType, LongType, ShortType
 
     ltype = embeddings.schema[label_col].dataType
@@ -368,48 +765,9 @@ def hard_negative_topk(
             f"integral type (byte/short/int/long), got {ltype.simpleString()} "
             "— join string labels through a dictionary table first"
         )
-    qrows = _bounded_query_rows(
-        embeddings, id_col, vec_col, query_filter, max_queries,
-        "hard_negative_topk", extra_cols=(label_col,),
-    )
-    schema = (
-        "vec_id bigint, rank int, neighbor_id bigint, "
-        "neighbor_label int, cos_sim double"
-    )
-    if not qrows:
-        return embeddings.sparkSession.createDataFrame([], schema)
-    if any(r[2] is None for r in qrows):
-        raise ValueError(
-            f"hard_negative_topk: null {label_col!r} among query rows — "
-            "the different-label mask is undefined for null labels; "
-            "filter or impute them first"
-        )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    q_labels = [int(r[2]) for r in qrows]
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-
-    rf = float(10**round_scale)
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(label_col).alias("nl"),
-        F.col(vec_col).alias("cv"),
-    )
-
-    candidates = corpus.mapInPandas(
-        _topk_scorer(q_ids, qm, k, rf, exclude_self=False, q_labels=q_labels),
-        schema="vec_id bigint, neighbor_id bigint, neighbor_label int, cos_sim double",
-    )
-    return top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select(
-        "vec_id", F.col("rank").cast("int").alias("rank"),
-        "neighbor_id", "neighbor_label", "cos_sim",
+    return _flat_topk(
+        embeddings, _FloatCode, k, query_filter, id_col, vec_col, round_scale,
+        max_queries, "hard_negative_topk", exclude_self=False, label_col=label_col,
     )
 
 
@@ -432,12 +790,8 @@ def cosine_near_dup_pairs(
     executors as a unit-normalized float64 matrix; the other side
     streams through its partitions, each Arrow batch scored by one BLAS
     matmul and mask-filtered to >= threshold before anything is
-    materialized. Exact all-pairs is inherently O(N^2) — this keeps the
-    constant BLAS-sized; at open-corpus scale run the same scoring
-    within LSH buckets (:func:`hyperplane_lsh_topk`) instead.
+    materialized.
     """
-    import numpy as np
-
     rows = embeddings.select(F.col(id_col), F.col(vec_col)).limit(max_corpus_rows + 1).collect()
     if len(rows) > max_corpus_rows:
         raise ValueError(
@@ -446,24 +800,17 @@ def cosine_near_dup_pairs(
             "lsh_near_dup_pairs for open-ended corpora"
         )
     ids = np.array([r[0] for r in rows], dtype=np.int64)
-    m = np.array([r[1] for r in rows], dtype=np.float64)
-    m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-
-    rf = float(10**round_scale)
+    m = _np_unit(np.array([r[1] for r in rows], dtype=np.float64))
     corpus = embeddings.select(F.col(id_col).alias("vec_b"), F.col(vec_col).alias("cv"))
 
     def score_partition(batches):
-        import numpy as np
         import pandas as pd
 
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            t = m @ cm.T
-            # half-away-from-zero rounding (dround twin)
-            sims = np.sign(t) * np.floor(np.abs(t) * rf + 0.5) / rf
+            cm = _np_unit(np.array(list(pdf["cv"]), dtype=np.float64))
+            sims = _nround(m @ cm.T, round_scale)
             bids = pdf["vec_b"].to_numpy()
             # a < b keeps each unordered pair exactly once (the a-side
             # runs over the full matrix, the b-side over this batch)
@@ -506,23 +853,20 @@ def lsh_near_dup_pairs(
     (~0.95) raise ``band_planes`` to 8-16 so buckets shrink ~2^-planes
     and within-bucket work stays sub-quadratic.
 
-    SCALE WARNING (loud, r10 SCALING.md evidence): few planes per band
-    put essentially EVERY pair in a shared bucket — an unrelated
+    SCALE WARNING (SCALING.md evidence): few planes per band put
+    essentially EVERY pair in a shared bucket — an unrelated
     (orthogonal) pair collides per band with ~2^-band_planes, so with
     the defaults (24 bands x 2 planes) ~99.9% of ALL pairs reach the
     exact within-bucket scorer and cost grows quadratically with the
-    corpus (measured 26x work for 8x rows at t=0.4/2-planes, vs 1.8x
-    at t=0.9/12-planes). That is inherent to recall at low thresholds,
-    not a bug — but it must be a choice, so this function emits a
+    corpus. That is inherent to recall at low thresholds, not a bug —
+    but it must be a choice, so this function emits a
     ``RuntimeWarning`` when the expected random-pair collision
     fraction 1-(1-2^-band_planes)^n_bands exceeds 5%. Alternatives at
     scale: raise the threshold + band_planes, use multi-probe
-    :func:`hyperplane_lsh_topk` (recall from probes instead of coarse
-    buckets), or text-side :func:`~..llm.dedup.jaccard_pairs` whose
-    prefix filter is exact and sub-quadratic at high thresholds.
+    :func:`hyperplane_lsh_topk`, or text-side
+    :func:`~..llm.dedup.jaccard_pairs` whose prefix filter is exact and
+    sub-quadratic at high thresholds.
     """
-    import numpy as np
-
     p_random = 0.5**band_planes
     random_pair_frac = 1.0 - (1.0 - p_random) ** n_bands
     if random_pair_frac > 0.05:
@@ -553,13 +897,11 @@ def lsh_near_dup_pairs(
     dim = len(row[0])
     rng = np.random.default_rng(seed)
     planes = rng.standard_normal((n_bands * band_planes, dim))
-    rf = float(10**round_scale)
     nb, bp = n_bands, band_planes
 
     src = embeddings.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
 
     def assign_buckets(batches):
-        import numpy as np
         import pandas as pd
 
         weights = (2 ** np.arange(bp)).astype(np.int64)
@@ -570,7 +912,7 @@ def lsh_near_dup_pairs(
             bits = (m @ planes.T >= 0).astype(np.int64)  # (n, nb*bp)
             buckets = bits.reshape(len(m), nb, bp) @ weights  # (n, nb)
             ids = pdf["vec_id"].to_numpy()
-            out = pd.DataFrame(
+            yield pd.DataFrame(
                 {
                     "band": np.repeat(np.arange(nb, dtype=np.int32), len(m)),
                     "bucket": buckets.T.reshape(-1),
@@ -578,24 +920,20 @@ def lsh_near_dup_pairs(
                     "v": list(pdf["v"]) * nb,
                 }
             )
-            yield out
 
     banded = src.mapInPandas(
         assign_buckets, schema=f"band int, bucket bigint, vec_id bigint, v {src.schema['v'].dataType.simpleString()}"
     )
 
     def score_bucket(pdf):
-        import numpy as np
         import pandas as pd
 
         if len(pdf) < 2:
             return pd.DataFrame({"vec_a": [], "vec_b": [], "cos_sim": []}).astype(
                 {"vec_a": "int64", "vec_b": "int64", "cos_sim": "float64"}
             )
-        m = np.array(list(pdf["v"]), dtype=np.float64)
-        m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-        t = m @ m.T
-        sims = np.sign(t) * np.floor(np.abs(t) * rf + 0.5) / rf  # dround twin
+        m = _np_unit(np.array(list(pdf["v"]), dtype=np.float64))
+        sims = _nround(m @ m.T, round_scale)
         ids = pdf["vec_id"].to_numpy()
         ai, bi = np.nonzero((sims >= threshold) & (ids[:, None] < ids[None, :]))
         return pd.DataFrame(
@@ -606,56 +944,6 @@ def lsh_near_dup_pairs(
         score_bucket, schema="vec_a bigint, vec_b bigint, cos_sim double"
     )
     return pairs.dropDuplicates(["vec_a", "vec_b"])
-
-
-def _write_centroid_sidecar(path: str, cents) -> None:
-    """(list_id, centroid) sidecar via :func:`_sidecar_write`."""
-    import pyarrow as pa
-
-    _sidecar_write(
-        path,
-        {
-            "list_id": list(range(len(cents))),
-            "centroid": [[float(v) for v in row] for row in cents],
-        },
-        pa.schema(
-            [("list_id", pa.int32()), ("centroid", pa.list_(pa.float64()))]
-        ),
-    )
-
-
-def _read_centroid_sidecar(path: str):
-    """centroid matrix (np float64, indexed by list_id) from the
-    sidecar — driver-side, no Spark job."""
-    import numpy as np
-
-    rows = _sidecar_rows(path)
-    cents = np.zeros((len(rows), len(rows[0]["centroid"])))
-    for r in rows:
-        cents[r["list_id"]] = r["centroid"]
-    return cents
-
-
-def _train_centroids(embeddings, vec_col, n_lists, seed, train_sample):
-    """Seeded k-means coarse quantizer: a few Lloyd iterations on cosine
-    (unit vectors -> dot argmax) over a bounded driver sample. Returns a
-    unit-normalized (n_lists, dim) ndarray — small enough to ship into
-    closures by value."""
-    import numpy as np
-
-    rng = np.random.default_rng(seed)
-    sample = embeddings.select(F.col(vec_col)).limit(train_sample).collect()
-    xs = np.array([r[0] for r in sample], dtype=np.float64)
-    xs = xs / np.maximum(np.linalg.norm(xs, axis=1, keepdims=True), 1e-12)
-    cents = xs[rng.choice(len(xs), size=min(n_lists, len(xs)), replace=False)]
-    for _ in range(5):
-        assign = (xs @ cents.T).argmax(axis=1)
-        for j in range(len(cents)):
-            members = xs[assign == j]
-            if len(members):
-                c = members.mean(axis=0)
-                cents[j] = c / max(np.linalg.norm(c), 1e-12)
-    return cents
 
 
 def ivf_topk(
@@ -671,96 +959,22 @@ def ivf_topk(
     train_sample: int = 2048,
     max_queries: int | None = None,
 ) -> DataFrame:
-    """IVF (inverted-file) approximate top-k — index-FREE form: one-shot
-    search where the corpus is scanned once and every vector's list
-    assignment is recomputed at score time. Use this when the corpus is
-    not worth materializing; for repeated searches over a large corpus,
-    :func:`ivf_build_index` + :func:`ivf_search` persist the assignment
-    as a physical partition key so a probe READS only ``n_probe /
-    n_lists`` of the data (partition pruning at the scan) instead of
-    scanning everything and discarding non-probed rows.
+    """IVF (inverted-file) approximate top-k — index-FREE form: the
+    corpus is scanned once and every vector's list assignment is
+    recomputed at score time. Use this when the corpus is not worth
+    materializing; for repeated searches, :func:`ivf_build_index` +
+    :func:`ivf_search` persist the assignment as a physical partition
+    key so a probe READS only ``n_probe / n_lists`` of the data.
 
     Train: k-means (a few Lloyd iterations, seeded, on a bounded driver
-    sample) -> ``n_lists`` centroids. Search: each query keeps scores
-    only from its ``n_probe`` nearest inverted lists. All scoring is
-    BLAS matmul in ``mapInPandas``; only centroid training touches the
-    driver.
+    sample) -> ``n_lists`` centroids. Search: each query keeps exact
+    cosine scores only from its ``n_probe`` nearest inverted lists.
     """
-    import numpy as np
-
-    cents = _train_centroids(embeddings, vec_col, n_lists, seed, train_sample)
-
-    qrows = _bounded_query_rows(
-        embeddings, id_col, vec_col, query_filter, max_queries, "ivf_topk"
+    coarse = _Coarse.fit(embeddings, vec_col, n_lists, seed, train_sample)
+    return _flat_topk(
+        embeddings, _FloatCode, k, query_filter, id_col, vec_col, round_scale,
+        max_queries, "ivf_topk", coarse=coarse, n_probe=n_probe,
     )
-    if not qrows:
-        schema = "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        return embeddings.sparkSession.createDataFrame([], schema)
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-    # each query probes its n_probe nearest lists (rounded key + stable
-    # sort: deterministic lowest-list-id tie-break, same as ivf_search)
-    q_probes = np.argsort(-_nround(qm @ cents.T), axis=1, kind="stable")[:, :n_probe]
-
-    rf = float(10**round_scale)
-    corpus = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        probe_sets = [set(map(int, row)) for row in q_probes]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            c_assign = _nround(cm @ cents.T).argmax(axis=1)
-            t = qm @ cm.T
-            # half-AWAY-from-zero (functions.money.dround twin): np.round
-            # is half-to-even and can disagree with the oracle on .5 ties
-            sims = np.sign(t) * np.floor(np.abs(t) * rf + 0.5) / rf
-            nids = pdf["neighbor_id"].to_numpy()
-            for qi, qid in enumerate(q_ids):
-                heap = heaps[int(qid)]
-                probes = probe_sets[qi]
-                s = sims[qi]
-                floor = heap[0][0] if len(heap) >= k else -2.0
-                for ci in np.nonzero(s >= floor)[0]:
-                    if int(c_assign[ci]) not in probes:
-                        continue  # outside the probed inverted lists
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(s[ci]), -nid)
-                    if len(heap) < k:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, cos)
-            for qid, heap in heaps.items()
-            for cos, neg_nid in heap
-        ]
-        yield pd.DataFrame(out, columns=["vec_id", "neighbor_id", "cos_sim"]).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "cos_sim": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition, schema="vec_id bigint, neighbor_id bigint, cos_sim double"
-    )
-    return top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select("vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "cos_sim")
 
 
 def ivf_build_index(
@@ -780,57 +994,17 @@ def ivf_build_index(
     This is what makes IVF pay at scale: :func:`ivf_search` pushes
     ``list_id IN (probes)`` into the scan as a partition filter, so a
     probe reads ``n_probe/n_lists`` of the FILES — the non-probed lists
-    are never opened, not scanned-then-discarded. Assignment is an
-    Arrow-batched argmax over the (tiny) centroid matrix shipped by
-    value — partition-parallel, no shuffle beyond the partitioned
-    write. Returns the centroid matrix for convenience.
+    are never opened, not scanned-then-discarded. Returns the centroid
+    matrix.
 
     ``centroids`` (an (n_lists, dim) array-like) skips k-means training
     and quantizes against the given coarse centroids — e.g. seed
     vectors chosen by a rule an external oracle can replay exactly
     (the catalog's hash-checked IVF entry passes the unit-normalized
     lowest-id corpus vectors)."""
-    import numpy as np
-
-    if centroids is not None:
-        cents = np.asarray(centroids, dtype=np.float64)
-    else:
-        cents = _train_centroids(embeddings, vec_col, n_lists, seed, train_sample)
-    _write_centroid_sidecar(f"{index_path}/centroids", cents)
-
-    cents_ship = cents.copy()
-
-    def assign(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            m = np.array(list(pdf["embedding"]), dtype=np.float64)
-            m = m / np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-            # assignment argmax on the ROUNDED dot (8dp): ties break
-            # first-index = lowest list_id, matching the oracle's
-            # (dot DESC, list_id) window
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "embedding": pdf["embedding"],
-                    "list_id": _nround(m @ cents_ship.T).argmax(axis=1).astype("int32"),
-                }
-            )
-
-    (
-        embeddings.select(
-            F.col(id_col).cast("bigint").alias("vec_id"),
-            F.col(vec_col).cast("array<double>").alias("embedding"),
-        )
-        .mapInPandas(assign, schema="vec_id bigint, embedding array<double>, list_id int")
-        .write.partitionBy("list_id")
-        .mode("overwrite")
-        .parquet(f"{index_path}/lists")
-    )
-    return cents
+    coarse = _Coarse.fit(embeddings, vec_col, n_lists, seed, train_sample, centroids)
+    _build_index(embeddings, index_path, _FloatCode(), coarse, id_col, vec_col)
+    return coarse.cents
 
 
 def ivf_search(
@@ -848,95 +1022,16 @@ def ivf_search(
     scan is FILTERED to the union of every query's ``n_probe`` nearest
     lists — ``list_id IN (...)`` is a partition filter, so non-probed
     list directories are never read (plan-asserted in tests). Each
-    query then keeps scores only from its own probed lists (the row's
-    stored ``list_id`` — no re-assignment at search time).
+    query then keeps scores only from its own probed lists. Equals
+    :func:`ivf_topk` row for row at the same centroids.
 
     ``queries`` is a bounded DataFrame of (id_col, vec_col);
     ``max_queries`` guards the driver collect the same way the other
     similarity operators do."""
-    import numpy as np
-
-    cents = _read_centroid_sidecar(f"{index_path}/centroids")
-
-    qrows = queries.select(F.col(id_col), F.col(vec_col)).limit(max_queries + 1).collect()
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"ivf_search: query set exceeds max_queries={max_queries}; "
-            "tighten the queries DataFrame or raise the cap deliberately"
-        )
-    if not qrows:
-        return spark.createDataFrame(
-            [], "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-    # probe ranking on the ROUNDED dot; stable sort so ties break by
-    # lowest list_id like the oracle's (dot DESC, list_id) window
-    q_probes = np.argsort(-_nround(qm @ cents.T), axis=1, kind="stable")[:, :n_probe]
-    probe_union = sorted({int(p) for row in q_probes for p in row})
-
-    corpus = (
-        spark.read.parquet(f"{index_path}/lists")
-        .filter(F.col("list_id").isin(probe_union))  # partition pruning
-        .select(F.col("vec_id").alias("neighbor_id"), F.col("embedding").alias("cv"), "list_id")
+    return _search(
+        spark, index_path, queries, None, _FloatCode, k, 0, id_col, vec_col,
+        round_scale, max_queries, n_probe, "ivf_search",
     )
-    rf = float(10**round_scale)
-    k_ = k
-
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        probe_sets = [set(map(int, row)) for row in q_probes]
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            lids = pdf["list_id"].to_numpy()
-            t = qm @ cm.T
-            sims = np.sign(t) * np.floor(np.abs(t) * rf + 0.5) / rf  # dround twin
-            nids = pdf["neighbor_id"].to_numpy()
-            for qi, qid in enumerate(q_ids):
-                heap = heaps[int(qid)]
-                probes = probe_sets[qi]
-                s = sims[qi]
-                floor = heap[0][0] if len(heap) >= k_ else -2.0
-                for ci in np.nonzero(s >= floor)[0]:
-                    if int(lids[ci]) not in probes:
-                        continue  # another query's probe, not this one's
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(s[ci]), -nid)
-                    if len(heap) < k_:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, cos)
-            for qid, heap in heaps.items()
-            for cos, neg_nid in heap
-        ]
-        yield pd.DataFrame(out, columns=["vec_id", "neighbor_id", "cos_sim"]).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "cos_sim": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition, schema="vec_id bigint, neighbor_id bigint, cos_sim double"
-    )
-    return top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select("vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "cos_sim")
 
 
 def ann_recall_summary(
@@ -947,14 +1042,10 @@ def ann_recall_summary(
     floor_ok). Everything is deterministic (seeded planes/centroids), so
     the row is reproducible run-to-run; ``floor_ok`` makes a recall
     regression visible as a value change, not just a silent drift."""
-    # ONE full-outer join + ONE aggregate (r21): the former
-    # three-1-row-aggregate crossJoin form executed the exact
-    # brute-force pipeline AND the ANN pipeline twice each (their own
-    # count + the hits join), as 4-5 separate jobs per composed-index
-    # query. (vec_id, neighbor_id) is unique within each top-k list, so
-    # per joined row the presence markers recover exactly the old
-    # counts: n_exact/n_ann = marker counts, n_hits = both-present,
-    # n_queries = distinct vec_id among exact rows.
+    # ONE full-outer join + ONE aggregate: (vec_id, neighbor_id) is
+    # unique within each top-k list, so per joined row the presence
+    # markers recover the counts: n_exact/n_ann = marker counts,
+    # n_hits = both-present, n_queries = distinct vec_id among exact rows
     ex = exact_topk.select("vec_id", "neighbor_id", F.lit(1).alias("__e"))
     an = ann_topk.select("vec_id", "neighbor_id", F.lit(1).alias("__a"))
     both = ex.join(an, ["vec_id", "neighbor_id"], "full_outer")
@@ -1027,13 +1118,11 @@ def hyperplane_lsh_topk(
     if dim is None:
         first = embeddings.select(vec_col).filter(F.col(vec_col).isNotNull()).first()
         if first is None:  # empty/all-null input: no buckets, no neighbors
-            return embeddings.sparkSession.createDataFrame(
-                [], "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-            )
+            return _empty_topk(embeddings.sparkSession)
         dim = len(first[0])
     planes = _planes(n_planes, dim)
     # one parsed literal instead of n_planes x dim F.lit py4j calls
-    # (r21 driver-cost fix; repr() round-trips every double exactly)
+    # (repr() round-trips every double exactly)
     plane_arr = F.expr(
         "array(" + ",".join(
             "array(" + ",".join(repr(v) + "D" for v in row) + ")"
@@ -1090,15 +1179,9 @@ def hyperplane_lsh_topk(
     c = bucketed.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"), "bucket")
     pairs = q.join(c, "bucket").filter(F.col("vec_id") != F.col("neighbor_id"))
     cos = _dot(F.col("qv"), F.col("cv")) / (_norm(F.col("qv")) * _norm(F.col("cv")))
-    scored = pairs.select("vec_id", "neighbor_id", _dround_once(cos, 8).alias("cos_sim"))
-    return top_k_per_group(
-        scored,
-        partition_by=["vec_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select("vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "cos_sim")
+    return _rank_topk(
+        pairs.select("vec_id", "neighbor_id", _dround_once(cos, 8).alias("cos_sim")), k
+    )
 
 
 def _train_pq_codebooks(embeddings, id_col, vec_col, m, ksub, seed, train_sample):
@@ -1111,8 +1194,6 @@ def _train_pq_codebooks(embeddings, id_col, vec_col, m, ksub, seed, train_sample
     layout and break end-to-end determinism across repartitioning.
     Returns (m, ksub, dim // m) float64 — a few KB, shipped into
     closures by value like the IVF centroids."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     sample = (
         embeddings.select(F.col(id_col), F.col(vec_col))
@@ -1121,8 +1202,7 @@ def _train_pq_codebooks(embeddings, id_col, vec_col, m, ksub, seed, train_sample
         .select(F.col(vec_col))
         .collect()
     )
-    xs = np.array([r[0] for r in sample], dtype=np.float64)
-    xs = xs / np.maximum(np.linalg.norm(xs, axis=1, keepdims=True), 1e-12)
+    xs = _np_unit(np.array([r[0] for r in sample], dtype=np.float64))
     dim = xs.shape[1]
     if dim % m != 0:
         raise ValueError(f"PQ: dim {dim} not divisible by m={m} subspaces")
@@ -1162,166 +1242,42 @@ def pq_topk(
     is COMPARED; PQ shrinks what is HELD: ``m`` uint8 codes per vector
     instead of ``dim`` floats, 32x at the defaults for dim=64).
 
-    Per partition: corpus vectors unit-normalize, encode to their
-    nearest codebook entry per subspace, and score against each query
-    by asymmetric distance computation — an (m x ksub) table of
-    query-subvector dot products per query, summed by code lookups
-    (this is the scan a PQ-compressed 100 TB index performs: bytes +
-    table lookups, no float vectors). The global top ``k + rerank``
-    ADC candidates are then re-scored EXACTLY by the shared JVM
-    re-rank stage (:func:`_adc_exact_rerank`: survivors broadcast-join
-    the float table and score with the codegen fold — the same IEEE op
-    sequence as the DuckDB oracle), and the final window ranks by
-    exact cosine — so PQ error affects only which candidates survive,
-    never the reported similarity of survivors.
+    Per partition: corpus vectors encode in-scan to their nearest
+    codebook entry per subspace (:class:`_PQCode`) and score against
+    each query by asymmetric distance computation — table lookups, no
+    float vectors (the scan a PQ-compressed index performs). The
+    global top ``k + rerank`` ADC candidates are then re-scored
+    EXACTLY by the shared JVM re-rank stage (:func:`_adc_exact_rerank`,
+    the same IEEE op sequence as the DuckDB oracle), so PQ error
+    affects only which candidates survive, never the reported
+    similarity of survivors.
 
     Determinism: the codebooks are layout-independent (seeded k-means
-    on the ``train_sample`` LOWEST ids — an ordered take, not an
-    un-ordered limit; or caller-supplied via ``books``), every per-row
-    step breaks ties deterministically (argmin first-index, id
-    tie-breaks), and the candidate set is PARTITION-INDEPENDENT: the
-    per-partition heaps order by the ROUNDED ADC score (6dp, so float
-    accumulation noise can't flip the ordering) with an id tie-break,
-    and a global ADC top-(k+rerank) cut applies before the exact
-    re-rank. Each partition's heap holds a superset of its share of
-    that global ADC top list, so the cut — and therefore the result —
-    is identical under any repartitioning, and an external oracle can
-    replay the whole pipeline.
-
-    ``books`` (an (m, ksub, dim//m) array-like) skips k-means training
-    and encodes against the given codebooks — e.g. subvectors of the
-    lowest-id corpus vectors, which a SQL oracle can reconstruct.
+    on the ``train_sample`` LOWEST ids, or caller-supplied via
+    ``books`` — an (m, ksub, dim//m) array-like, e.g. subvectors of the
+    lowest-id corpus vectors, which a SQL oracle can reconstruct), the
+    ADC score rounds at 6dp with id tie-breaks, and the global ADC cut
+    is partition-independent, so an external oracle can replay the
+    whole pipeline.
 
     ``rerank=None`` (the default) SCALES the exact-rerank budget with
-    the corpus: ``max(128, ceil(n/16))`` candidates, costing one cheap
-    ``count()`` of the corpus frame. A FIXED budget silently loses
-    recall as the corpus grows — the r10 SCALING.md re-measure saw
-    recall 0.742 → 0.502 at 8x corpus under a pinned ``rerank=128``
-    (the ADC candidate pool grew 8x but the exact window did not),
-    while n/16 held 0.742 at the base scale and restores it at 8x.
-    The rerank is still a vanishing fraction of the ADC scan (1/16 of
-    the corpus per query, exact-scored only for heap survivors); for
-    sub-linear per-query cost compose with IVF list-pruning
-    (``ivf_search``), which bounds the scanned corpus per probe —
-    then a fixed budget proportional to the probed-list size is
-    appropriate. Pass an explicit int to pin the budget (the graded
-    catalog entry pins 128 so its oracle hash is scale-stable).
-
-    The auto budget is CAPPED at 8192: per-query per-partition heap
-    memory and the candidate shuffle both scale with ``k + rerank``,
-    so an uncapped n/16 would grow them linearly with the corpus (a
-    50M-row corpus would mean ~3M-entry heaps per query — executor
-    OOM). Past the cap, flat-scan PQ stops being the right tool:
-    compose with IVF so the per-probe pool, and hence a fixed budget,
-    stays bounded. The one ``count()`` job at call time is the
-    documented price of auto-scaling; pass an explicit ``rerank`` to
-    stay action-free.
+    the corpus (:func:`_auto_rerank_budget` at the PQ floor of 128:
+    ``max(128, ceil(n/16))`` capped at 8192), costing one ``count()``
+    of the corpus frame. A FIXED budget silently loses recall as the
+    corpus grows (SCALING.md: recall 0.742 -> 0.502 at 8x corpus under
+    a pinned 128, restored by n/16); the cap bounds per-query heap
+    memory and the candidate shuffle — past it, compose with IVF
+    (:func:`pq_build_index` with ``n_lists``) so the probed pool stays
+    bounded. Pass an explicit int to pin the budget and stay
+    action-free (the graded catalog entry pins 128).
     """
-    import numpy as np
-
     if rerank is None:
-        # the shared helper with the PQ floor (128) — pq_search's
-        # rerank=None path resolves through the same call, so the
-        # logical/physical parity claim holds for the auto budget too
-        rerank = _auto_rerank_budget(embeddings.count(), floor=128)
-
-    qrows = _bounded_query_rows(
-        embeddings, id_col, vec_col, query_filter, max_queries, "pq_topk"
-    )
-    if not qrows:
-        # also covers the empty-corpus case (queries come from the same
-        # frame), so codebook training below always has sample vectors
-        schema = "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        return embeddings.sparkSession.createDataFrame([], schema)
-    if books is not None:
-        books = np.asarray(books, dtype=np.float64)
-        if books.shape[0] != m or books.shape[1] != ksub:
-            raise ValueError(f"books shape {books.shape} != (m={m}, ksub={ksub}, dsub)")
-    else:
-        books = _train_pq_codebooks(embeddings, id_col, vec_col, m, ksub, seed, train_sample)
-    dsub = books.shape[2]
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qm = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qm / np.maximum(np.linalg.norm(qm, axis=1, keepdims=True), 1e-12)
-    # ADC lookup tables: (n_queries, m, ksub) — query subvector dots
-    # with every codebook entry, built once on the driver
-    tables = np.einsum("qjd,jkd->qjk", qm.reshape(len(qm), m, dsub), books)
-
-    keep = k + rerank
-    corpus = embeddings.select(F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cv"))
-
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cm = np.array(list(pdf["cv"]), dtype=np.float64)
-            cm = cm / np.maximum(np.linalg.norm(cm, axis=1, keepdims=True), 1e-12)
-            sub = cm.reshape(len(cm), m, dsub)
-            # encode: nearest codebook entry per subspace — argmin on
-            # the ROUNDED Euclidean distance (8dp, mirroring the
-            # oracle's o_round(list_distance) key) so a near-tie can't
-            # flip a code between engines; first-index ties = lowest
-            # cid, matching the oracle's (dist, cid) window
-            codes = np.empty((len(cm), m), dtype=np.int64)
-            for j in range(m):
-                d2 = ((sub[:, j, None, :] - books[None, j]) ** 2).sum(axis=2)
-                codes[:, j] = _nround(np.sqrt(d2)).argmin(axis=1)
-            nids = pdf["neighbor_id"].to_numpy()
-            js = np.arange(m)
-            for qi, qid in enumerate(q_ids):
-                # ADC score: sum of table lookups over the m codes —
-                # ROUNDED (6dp, half-away like dround) so the heap /
-                # global-cut ordering is reproducible across engines and
-                # accumulation orders; ties break by neighbor id
-                adc = tables[qi][js, codes].sum(axis=1)
-                adc = np.sign(adc) * np.floor(np.abs(adc) * 1e6 + 0.5) / 1e6
-                heap = heaps[int(qid)]
-                floor = heap[0][0] if len(heap) >= keep else -2.0
-                for ci in np.nonzero(adc >= floor)[0]:
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(adc[ci]), -nid)
-                    if len(heap) < keep:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, adc_r)
-            for qid, heap in heaps.items()
-            for adc_r, neg_nid in heap
-        ]
-        yield pd.DataFrame(
-            out, columns=["vec_id", "neighbor_id", "adc"]
-        ).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "adc": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition,
-        schema="vec_id bigint, neighbor_id bigint, adc double",
-    )
-    # global ADC top-(k+rerank) cut first — every partition heap holds a
-    # superset of its share of this list, so the cut is
-    # partition-independent — then re-rank the survivors by EXACT
-    # cosine: ADC only ever chooses candidates, never reported scores.
-    # The re-rank is the shared JVM fold stage (r13): identical IEEE op
-    # sequence to the DuckDB oracle, no numpy-accumulation boundary risk
-    adc_cut = top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("adc").desc(), F.col("neighbor_id").asc()],
-        k=keep,
-    )
-    return _adc_exact_rerank(
-        embeddings.sparkSession, adc_cut, qrows, embeddings,
-        id_col, vec_col, k, round_scale, cand_bound=len(qrows) * keep,
+        rerank = _PQCode.budget(embeddings.count())
+    return _flat_topk(
+        embeddings,
+        lambda: _PQCode.fit(embeddings, id_col, vec_col, m, ksub, seed, train_sample, books),
+        k, query_filter, id_col, vec_col, round_scale, max_queries, "pq_topk",
+        rerank=rerank,
     )
 
 
@@ -1339,116 +1295,30 @@ def pq_build_index(
     centroids=None,
 ) -> None:
     """Materialize the PQ physical layout — the classic IVFPQ index
-    when composed with ``n_lists`` (Jégou et al. 2011, the canonical
-    billion-scale ANN layout): the corpus encoded to
-    ``{index_path}/codes`` as (vec_id, codes binary) — ``m`` BYTES per
-    vector, a ``dim*8/m``-fold shrink over float64 (64x at the
-    defaults for dim=64) — plus the ``{index_path}/books`` codebook
-    sidecar (m*ksub rows). This completes the physical symmetry with
-    :func:`sq8_build_index`: SQ8's codes cut scan BANDWIDTH 8x keeping
-    every dimension; PQ's codes shrink what is HELD far harder at the
-    price of a coarse ADC, which is why :func:`pq_search` defaults to
-    the corpus-scaled exact-rerank budget.
-
-    Encoding is ONE Arrow pass replaying :func:`pq_topk` bit for bit:
-    unit-normalize, per-subspace argmin on the ROUNDED L2 distance
-    (8dp, first-index = lowest code ties) — so a physical search
-    equals the logical flat scan row for row at the same parameters.
+    when composed with ``n_lists`` (Jégou et al. 2011): the corpus
+    encoded to ``{index_path}/codes`` as (vec_id, codes binary) — ``m``
+    BYTES per vector, a ``dim*8/m``-fold shrink over float64 — plus the
+    ``{index_path}/books`` codebook sidecar. The encode is the one
+    :func:`pq_topk` runs in-scan, bit for bit, so a physical search
+    equals the flat scan row for row at the same parameters.
 
     ``n_lists`` composes the two pruning axes exactly as in
-    ``sq8_build_index``: codes additionally carry the coarse-list
-    assignment (argmax rounded dot, lowest-list ties; centroids to
-    ``{index_path}/centroids``) and write PARTITIONED BY ``list_id``,
-    so a probed :func:`pq_search` opens ``n_probe/n_lists`` of the
-    FILES and reads ``m`` bytes per held vector — IVF prunes what is
-    read, PQ shrinks what is held.
+    :func:`sq8_build_index`: codes additionally carry the coarse-list
+    assignment (centroids to ``{index_path}/centroids``; ``centroids``
+    overrides the seeded k-means trainer) and write PARTITIONED BY
+    ``list_id``, so a probed :func:`pq_search` opens ``n_probe/n_lists``
+    of the FILES and reads ``m`` bytes per held vector.
 
     ``books`` (an (m, ksub, dim//m) array-like) skips the seeded
     k-means trainer, e.g. the lowest-id-subvector books a SQL oracle
     can reconstruct (the ``emb_pq_topk`` treatment).
     """
-    import numpy as np
-
-    if books is not None:
-        books = np.asarray(books, dtype=np.float64)
-        if books.shape[0] != m or books.shape[1] != ksub:
-            raise ValueError(
-                f"books shape {books.shape} != (m={m}, ksub={ksub}, dsub)"
-            )
-    else:
-        books = _train_pq_codebooks(
-            embeddings, id_col, vec_col, m, ksub, seed, train_sample
-        )
-    dsub = books.shape[2]
-
-    import pyarrow as pa
-
-    _sidecar_write(
-        f"{index_path}/books",
-        {
-            "j": [j for j in range(m) for _ in range(ksub)],
-            "cid": [c for _ in range(m) for c in range(ksub)],
-            "bv": [
-                [float(v) for v in books[j, c]]
-                for j in range(m)
-                for c in range(ksub)
-            ],
-        },
-        pa.schema(
-            [("j", pa.int32()), ("cid", pa.int32()), ("bv", pa.list_(pa.float64()))]
-        ),
+    code = _PQCode.fit(embeddings, id_col, vec_col, m, ksub, seed, train_sample, books)
+    coarse = (
+        None if n_lists is None
+        else _Coarse.fit(embeddings, vec_col, n_lists, seed, train_sample, centroids)
     )
-
-    cents = None
-    if n_lists is not None:
-        cents = (
-            np.asarray(centroids, dtype=np.float64)
-            if centroids is not None
-            else _train_centroids(embeddings, vec_col, n_lists, seed, train_sample)
-        )
-        _write_centroid_sidecar(f"{index_path}/centroids", cents)
-
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            raw = np.array(list(pdf[vec_col]), dtype=np.float64)
-            cm = raw / np.maximum(
-                np.linalg.norm(raw, axis=1, keepdims=True), 1e-12
-            )
-            sub = cm.reshape(len(cm), m, dsub)
-            codes = np.empty((len(cm), m), dtype=np.uint8)
-            for j in range(m):
-                d2 = ((sub[:, j, None, :] - books[None, j]) ** 2).sum(axis=2)
-                codes[:, j] = _nround(np.sqrt(d2)).argmin(axis=1)
-            out = {
-                "vec_id": pdf[id_col].to_numpy(),
-                "codes": [row.tobytes() for row in codes],
-            }
-            if cents is not None:
-                out["list_id"] = (
-                    _nround(cm @ cents.T).argmax(axis=1).astype("int32")
-                )
-            yield pd.DataFrame(out)
-
-    writer = (
-        embeddings.select(
-            F.col(id_col).cast("bigint").alias(id_col),
-            F.col(vec_col).cast("array<double>").alias(vec_col),
-        )
-        .mapInPandas(
-            encode,
-            schema="vec_id bigint, codes binary"
-            + (", list_id int" if cents is not None else ""),
-        )
-        .write.mode("overwrite")
-    )
-    if cents is not None:
-        writer = writer.partitionBy("list_id")
-    writer.parquet(f"{index_path}/codes")
+    _build_index(embeddings, index_path, code, coarse, id_col, vec_col)
 
 
 def pq_search(
@@ -1467,165 +1337,30 @@ def pq_search(
     """Search a materialized PQ index (:func:`pq_build_index`) — IVFPQ
     when the index is list-partitioned: the candidate stage scans ONLY
     (vec_id, codes) at ``m`` bytes per vector, scores by ADC table
-    lookups against the broadcast codebook sidecar, and heaps the
-    global top-(k+rerank) rounded sums per query; survivors re-rank
-    exactly through the shared JVM fold stage
-    (:func:`_adc_exact_rerank` — the float table is touched only via
-    broadcast joins on the candidate ids). One Python stage: the byte
-    scan, exactly like :func:`sq8_search`.
+    lookups against the codebook sidecar, and heaps the global
+    top-(k+rerank) rounded sums per query; survivors re-rank exactly
+    through the shared JVM fold stage (:func:`_adc_exact_rerank` — the
+    float table is touched only via broadcast joins on the candidate
+    ids).
 
     On a list-partitioned index the probe set prunes both axes:
-    ``list_id IN (probes)`` is a partition filter (non-probed
-    directories never open) and what IS read is ``m`` bytes per
-    vector. ``n_probe`` defaults to 4 there; probing every list
-    reproduces the flat answer exactly.
+    ``list_id IN (probes)`` is a partition filter and what IS read is
+    ``m`` bytes per vector. ``n_probe`` defaults to 4 there; probing
+    every list reproduces the flat answer exactly; ``n_probe`` on an
+    un-listed index raises.
 
     ``rerank=None`` (the DEFAULT here, unlike ``sq8_search``) applies
-    the corpus-scaled budget (:func:`_auto_rerank_budget` with the PQ
-    floor of 128, over the probed codes count): PQ's coarse 8-code ADC
-    genuinely needs the budget to track the candidate pool (the r10
-    lesson — recall 0.742 -> 0.502 at 8x under a pinned 128), where
-    SQ8's near-exact ADC does not. Composing with IVF keeps the pool —
-    and hence the budget — bounded by the probed fraction.
-
-    Matches :func:`pq_topk` row for row at the same parameters (same
-    encode, same rounded-ADC ordering, same partition-independent cut,
-    same shared exact re-rank; pinned in tests) — INCLUDING
-    ``rerank=None`` on a flat index, where both paths resolve the
-    budget through the same helper at the same floor.
+    the corpus-scaled budget at the PQ floor of 128 over the PROBED
+    codes count — the same helper and floor as :func:`pq_topk`, so the
+    two match row for row at ``rerank=None`` too.
 
     CONTRACT: ``embeddings`` must be the SAME corpus the index was
-    built from (the rerank joins survivors back by id), exactly as
-    with ``sq8_search``/``ivf_search``.
+    built from (the rerank joins survivors back by id).
     """
-    import numpy as np
-
-    book_rows = _sidecar_rows(f"{index_path}/books")
-    m = max(r["j"] for r in book_rows) + 1
-    ksub = max(r["cid"] for r in book_rows) + 1
-    dsub = len(book_rows[0]["bv"])
-    books = np.zeros((m, ksub, dsub), dtype=np.float64)
-    for r in book_rows:
-        books[r["j"], r["cid"]] = r["bv"]
-
-    qrows = (
-        queries.select(F.col(id_col), F.col(vec_col))
-        .limit(max_queries + 1)
-        .collect()
+    return _search(
+        spark, index_path, queries, embeddings, _PQCode, k, rerank, id_col,
+        vec_col, round_scale, max_queries, n_probe, "pq_search",
     )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"pq_search: query set exceeds max_queries={max_queries}; "
-            "tighten the queries DataFrame or raise the cap deliberately"
-        )
-    if not qrows:
-        return spark.createDataFrame(
-            [], "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qt = np.array([r[1] for r in qrows], dtype=np.float64)
-    qm = qt / np.maximum(np.linalg.norm(qt, axis=1, keepdims=True), 1e-12)
-    tables = np.einsum("qjd,jkd->qjk", qm.reshape(len(qm), m, dsub), books)
-
-    corpus = spark.read.parquet(f"{index_path}/codes")
-    q_probes = None
-    if "list_id" in corpus.columns:
-        if n_probe is None:
-            n_probe = 4
-        cents = _read_centroid_sidecar(f"{index_path}/centroids")
-        q_probes = np.argsort(
-            -_nround(qm @ cents.T), axis=1, kind="stable"
-        )[:, :n_probe]
-        probe_union = sorted({int(p) for row in q_probes for p in row})
-        corpus = corpus.filter(F.col("list_id").isin(probe_union))
-    elif n_probe is not None:
-        raise ValueError(
-            "pq_search: n_probe given but the index has no list_id "
-            "partitions — rebuild with pq_build_index(n_lists=...)"
-        )
-    if rerank is None:
-        # PQ floor (128): same helper + same floor as pq_topk, so the
-        # two paths resolve identical budgets at the same scanned count
-        rerank = _auto_rerank_budget(corpus.count(), floor=128)
-    keep = k + rerank
-
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        probe_sets = (
-            None if q_probes is None
-            else [set(map(int, row)) for row in q_probes]
-        )
-        js = np.arange(m)
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            codes = np.frombuffer(
-                b"".join(pdf["codes"]), dtype=np.uint8
-            ).reshape(len(pdf), m).astype(np.int64)
-            nids = pdf["vec_id"].to_numpy()
-            lids = pdf["list_id"].to_numpy() if probe_sets is not None else None
-            for qi, qid in enumerate(q_ids):
-                adc = tables[qi][js, codes].sum(axis=1)
-                adc = np.sign(adc) * np.floor(np.abs(adc) * 1e6 + 0.5) / 1e6
-                heap = heaps[int(qid)]
-                floor = heap[0][0] if len(heap) >= keep else -2.0
-                for ci in np.nonzero(adc >= floor)[0]:
-                    if lids is not None and int(lids[ci]) not in probe_sets[qi]:
-                        continue
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(adc[ci]), -nid)
-                    if len(heap) < keep:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, adc_r)
-            for qid, heap in heaps.items()
-            for adc_r, neg_nid in heap
-        ]
-        yield pd.DataFrame(
-            out, columns=["vec_id", "neighbor_id", "adc"]
-        ).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "adc": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition,
-        schema="vec_id bigint, neighbor_id bigint, adc double",
-    )
-    cand_cut = top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("adc").desc(), F.col("neighbor_id").asc()],
-        k=keep,
-    )
-    return _adc_exact_rerank(
-        spark, cand_cut, qrows, embeddings, id_col, vec_col, k,
-        round_scale, cand_bound=len(qrows) * keep,
-    )
-
-
-def _np_unit_rounded(m):
-    """The 8dp-rounded unit vectors of a (rows, dim) float64 matrix,
-    accumulating the norm STRICTLY left-to-right via ``np.cumsum`` —
-    the exact IEEE op sequence of both the JVM ``F.aggregate`` fold
-    (`_dot`) and DuckDB's ``list_dot_product``, so every downstream
-    SQ8 code is bit-identical across engines (a plain ``.sum()`` would
-    pairwise-accumulate and could differ by an ulp on the 8dp
-    boundary; equality with the JVM fold is pinned in tests). Zero
-    vectors clamp like ``_norm``."""
-    import numpy as np
-
-    n2 = np.cumsum(m * m, axis=1)[:, -1]
-    norm = np.maximum(np.sqrt(n2), 1e-12)
-    return _nround(m / norm[:, None])
 
 
 def _sq8_dim_stats(df: DataFrame, id_col: str, vec_col: str):
@@ -1634,10 +1369,8 @@ def _sq8_dim_stats(df: DataFrame, id_col: str, vec_col: str):
     dim-count rows per PARTITION (partial min/max inside the batch
     loop), then a dim-row final aggregate: the shuffle carries
     partitions x dim rows, never data."""
-    import numpy as np
 
     def partial(batches):
-        import numpy as np
         import pandas as pd
 
         lo = hi = None
@@ -1689,24 +1422,18 @@ def _adc_exact_rerank(
     round_scale: int,
     cand_bound: int | None = None,
 ) -> DataFrame:
-    """The SHARED exact re-rank stage of the quantized scans
-    (:func:`pq_topk`, :func:`pq_search`, :func:`sq8_topk`,
-    :func:`sq8_search`): join the ADC-survivor list
-    (at most |queries| x (k+rerank) ids) against the float table,
-    broadcast the collected query vectors, and score with the JVM
-    codegen ``_dot``/``_norm`` fold — the same left-to-right IEEE op
-    sequence DuckDB's ``list_dot_product`` uses, so the
+    """The SHARED exact re-rank stage of the quantized scans: join the
+    ADC-survivor list (at most |queries| x (k+rerank) ids) against the
+    float table, broadcast the collected query vectors, and score with
+    the JVM codegen ``_dot``/``_norm`` fold — the same left-to-right
+    IEEE op sequence DuckDB's ``list_dot_product`` uses, so the
     ``round_scale``-rounded cosine is identical across engines by
-    construction (an accumulation-order ulp on the rounding boundary
-    cannot occur; the callers share this code, so their row-for-row
-    parity is structural). Full-width vectors are read for candidates
-    only, never the corpus.
+    construction. Full-width vectors are read for candidates only,
+    never the corpus.
 
     ``cand_bound`` is the caller's upper bound on the survivor-list
-    rows (|queries| x (k+rerank)). The broadcast hint on the survivor
-    join applies only when that bound is known and under
-    ``_BROADCAST_CAND_ROWS`` — at the documented caps the list is
-    ~80M rows, well past sensible broadcast size, so larger (or
+    rows. The broadcast hint on the survivor join applies only when
+    that bound is known and under ``_BROADCAST_CAND_ROWS``; larger (or
     unknown) bounds leave the strategy to AQE's measured sizes."""
     qdf = spark.createDataFrame(
         [(int(r[0]), [float(v) for v in r[1]]) for r in qrows],
@@ -1730,16 +1457,7 @@ def _adc_exact_rerank(
         .join(F.broadcast(qdf), "vec_id")
         .select("vec_id", "neighbor_id", cos.alias("cos_sim"))
     )
-    return top_k_per_group(
-        scored,
-        partition_by=["vec_id"],
-        order_by=[F.col("cos_sim").desc(), F.col("neighbor_id").asc()],
-        k=k,
-        rank_col="rank",
-        keep_rank=True,
-    ).select(
-        "vec_id", F.col("rank").cast("int").alias("rank"), "neighbor_id", "cos_sim"
-    )
+    return _rank_topk(scored, k)
 
 
 def sq8_topk(
@@ -1753,275 +1471,87 @@ def sq8_topk(
     max_queries: int | None = None,
 ) -> DataFrame:
     """Int8 scalar-quantized approximate top-k with exact re-rank — the
-    MEMORY-BANDWIDTH path of the ANN family (IVF prunes what is READ,
-    LSH prunes what is COMPARED, PQ shrinks what is HELD to ``m``
-    codes; SQ8 keeps EVERY dimension but at 1 byte instead of 8:
-    per-dimension affine min/max quantization of the unit-normalized
-    corpus, so a 100 TB float64 index scans as ~12.5 TB of codes).
+    MEMORY-BANDWIDTH path of the ANN family (PQ shrinks what is HELD to
+    ``m`` codes; SQ8 keeps EVERY dimension at 1 byte instead of 8, so a
+    100 TB float64 index scans as ~12.5 TB of codes).
 
     Training is ONE Arrow scan with per-partition partial min/max over
-    the ROUNDED unit values (the shuffle carries dim-count rows per
-    partition, not data). Each corpus vector then encodes as
-    ``code_d = floor((u_d - mn_d) / (mx_d - mn_d) * 255 + 0.5)`` and
-    scores against a query by the dot product with the DEQUANTIZED
-    vector ``mn_d + code_d * (mx_d - mn_d) / 255`` — the scan a
-    byte-compressed index performs (a production deployment persists
-    the codes column once and scans bytes + the two 64-float tables;
-    the graded entry re-encodes in-scan like ``pq_topk``, and the
-    affine form means the scan could equally score
-    ``q·mn + (q*scale)·codes`` without materializing the floats).
-    The top ``k + rerank`` candidates re-rank EXACTLY, so quantization
-    error affects only which candidates survive, never reported
-    similarities.
+    the ROUNDED unit values (:func:`_sq8_dim_stats`); each corpus
+    vector then encodes in-scan (:class:`_SQ8Code`) and scores by the
+    dot with its DEQUANTIZED vector — the scan :func:`sq8_search`
+    performs over the persisted codes. The top ``k + rerank``
+    candidates re-rank EXACTLY (:func:`_adc_exact_rerank`), so
+    quantization error affects only which candidates survive, never
+    reported similarities.
 
-    Determinism (oracle-replayable end to end): the quantization
-    INPUT is :func:`_np_unit_rounded` — the norm accumulates strictly
-    left-to-right (``np.cumsum``), the exact IEEE op sequence of both
-    the JVM ``F.aggregate`` fold and DuckDB's ``list_dot_product``
-    twin (pinned equal in tests) — so codes are BIT-IDENTICAL across
-    engines, and the per-dim min/max are selections of those shared
-    values (no accumulation). The ADC analog rounds at 6dp, the exact
-    cosine at ``round_scale``, every ordering breaks ties by id, and
-    the candidate cut is partition-independent (per-partition heaps on
-    the rounded score hold a superset of the global top-(k+rerank)).
-    The exact re-rank itself runs JVM-SIDE (survivors of the global
-    ADC cut broadcast-join back to the float table and score with the
-    codegen ``_dot``/``_norm`` fold) — the same left-to-right IEEE op
-    sequence as DuckDB's ``list_dot_product``, so the 8dp-rounded
-    exact value can never differ by a boundary ulp the way a
-    numpy/BLAS accumulation could, and :func:`sq8_search` shares the
-    stage verbatim (the row-for-row parity claim rests on identical
-    code, not on two accumulation orders happening to agree).
+    Determinism (oracle-replayable end to end): the quantization input
+    is :func:`_np_unit_rounded`, whose left-to-right norm is the IEEE
+    op sequence of both the JVM fold and DuckDB's ``list_dot_product``
+    (pinned equal in tests), so codes are BIT-IDENTICAL across engines
+    and the per-dim min/max are selections of those shared values. The
+    ADC analog rounds at 6dp, the exact cosine at ``round_scale``,
+    every ordering breaks ties by id, and the candidate cut is
+    partition-independent.
 
     Unlike ``pq_topk`` the default ``rerank`` is a small FIXED 32:
     8-bit-per-dim reconstruction error is tiny (the ADC ordering is
     nearly exact), so the budget does not need to scale with the
     corpus the way PQ's coarse 8-code ADC does.
     """
-    import numpy as np
-
-    qrows = _bounded_query_rows(
-        embeddings, id_col, vec_col, query_filter, max_queries, "sq8_topk"
-    )
-    if not qrows:
-        schema = "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        return embeddings.sparkSession.createDataFrame([], schema)
-    # per-dimension min/max of the shared rounded unit values: the one
-    # training pass — a dim-row collect after the partial aggregate
-    mn, mx = _sq8_dim_stats(embeddings, id_col, vec_col)
-    span = mx - mn
-    scale = span / 255.0
-    nz = span > 0
-
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qt = np.array([r[1] for r in qrows], dtype=np.float64)  # true vectors
-    qn = _np_unit_rounded(qt)  # rounded unit (the oracle's quantization input)
-
-    keep = k + rerank
-    corpus = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("cv"),
+    return _flat_topk(
+        embeddings, lambda: _SQ8Code.fit(embeddings, id_col, vec_col), k,
+        query_filter, id_col, vec_col, round_scale, max_queries, "sq8_topk",
+        rerank=rerank,
     )
 
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            raw = np.array(list(pdf["cv"]), dtype=np.float64)
-            # encode from the fold-order-exact rounded unit values —
-            # same doubles the oracle quantizes, so codes match bit for
-            # bit; in a persisted-index deployment this IS the uint8
-            # column (sq8_build_index materializes it)
-            um = _np_unit_rounded(raw)
-            codes = np.zeros_like(um)
-            codes[:, nz] = np.floor(
-                (um[:, nz] - mn[nz]) / span[nz] * 255.0 + 0.5
-            )
-            deq = mn + codes * scale
-            nids = pdf["neighbor_id"].to_numpy()
-            adc_all = qn @ deq.T
-            adc_all = np.sign(adc_all) * np.floor(np.abs(adc_all) * 1e6 + 0.5) / 1e6
-            for qi, qid in enumerate(q_ids):
-                adc = adc_all[qi]
-                heap = heaps[int(qid)]
-                floor = heap[0][0] if len(heap) >= keep else -2.0
-                for ci in np.nonzero(adc >= floor)[0]:
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(adc[ci]), -nid)
-                    if len(heap) < keep:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, adc_r)
-            for qid, heap in heaps.items()
-            for adc_r, neg_nid in heap
-        ]
-        yield pd.DataFrame(
-            out, columns=["vec_id", "neighbor_id", "adc"]
-        ).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "adc": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition,
-        schema="vec_id bigint, neighbor_id bigint, adc double",
-    )
-    adc_cut = top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("adc").desc(), F.col("neighbor_id").asc()],
-        k=keep,
-    )
-    return _adc_exact_rerank(
-        embeddings.sparkSession, adc_cut, qrows, embeddings,
-        id_col, vec_col, k, round_scale, cand_bound=len(qrows) * keep,
-    )
 
 def sq8_build_index(
     embeddings: DataFrame,
     index_path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    packed: bool = True,
     n_lists: int | None = None,
     centroids=None,
     seed: int = 42,
     train_sample: int = 2048,
 ):
     """Materialize the SQ8 physical layout: the corpus encoded to
-    ``{index_path}/codes`` as (vec_id, codes array<smallint>) — one
-    byte of information per dimension — plus the per-dimension
-    ``{index_path}/minmax`` sidecar (dim rows). This is where the
-    bandwidth claim becomes physical: :func:`sq8_search` scans ONLY
-    the codes files (the float column never appears in its candidate
-    stage), the way :func:`ivf_build_index` makes IVF's pruning
-    physical. Encoding is one Arrow pass (the fold-order-exact rounded
-    unit values + per-dim affine quantization — no shuffle beyond the
-    write) after the one partial-aggregate min/max training scan.
-    Returns (mn, mx).
-
-    ``packed=True`` (the default) stores each vector's 0..255 codes as
-    ONE ``binary`` cell — exactly ``dim`` bytes of payload, decoded in
-    the scan by a single ``np.frombuffer`` over the Arrow batch
-    instead of per-element list materialization. On DISK parquet's
-    bit-packing makes the two layouts near-identical (measured at
-    sf0.001); the packed win is decode/transfer cost, not compression.
-    ``packed=False`` writes ``array<smallint>`` for layouts a plain
-    SQL engine should unnest. :func:`sq8_search` auto-detects either.
+    ``{index_path}/codes`` as (vec_id, codes binary) — ``dim`` bytes of
+    payload per vector, decoded in the scan by one ``np.frombuffer``
+    per Arrow batch — plus the per-dimension ``{index_path}/minmax``
+    sidecar. :func:`sq8_search` scans ONLY the codes files (the float
+    column never appears in its candidate stage). Encoding is one Arrow
+    pass after the one partial-aggregate min/max training scan, and is
+    the one :func:`sq8_topk` runs in-scan, bit for bit. Returns
+    (mn, mx).
 
     ``n_lists`` COMPOSES the two pruning axes: the codes additionally
     carry an IVF coarse-list assignment and write PARTITIONED BY
-    ``list_id`` (centroids to ``{index_path}/centroids`` as in
+    ``list_id`` (centroids to ``{index_path}/centroids``; ``centroids``
+    overrides the seeded k-means trainer exactly as in
     :func:`ivf_build_index`), so a probed :func:`sq8_search` reads
-    ``n_probe/n_lists`` of the FILES and an eighth of the BYTES —
-    IVF prunes what is read, SQ8 shrinks what is scanned.
-    ``centroids`` overrides the seeded k-means trainer exactly as in
-    ``ivf_build_index``.
+    ``n_probe/n_lists`` of the FILES and an eighth of the BYTES.
     """
-    import numpy as np
-
-    mn, mx = _sq8_dim_stats(embeddings, id_col, vec_col)
-    span = mx - mn
-    nz = span > 0
-    dim = len(mn)
-
-    import pyarrow as pa
-
-    _sidecar_write(
-        f"{index_path}/minmax",
-        {
-            "pos": list(range(dim)),
-            "mn": [float(v) for v in mn],
-            "mx": [float(v) for v in mx],
-        },
-        pa.schema([("pos", pa.int32()), ("mn", pa.float64()), ("mx", pa.float64())]),
+    code = _SQ8Code.fit(embeddings, id_col, vec_col)
+    coarse = (
+        None if n_lists is None
+        else _Coarse.fit(embeddings, vec_col, n_lists, seed, train_sample, centroids)
     )
-
-    cents = None
-    if n_lists is not None:
-        cents = (
-            np.asarray(centroids, dtype=np.float64)
-            if centroids is not None
-            else _train_centroids(embeddings, vec_col, n_lists, seed, train_sample)
-        )
-        _write_centroid_sidecar(f"{index_path}/centroids", cents)
-
-    def encode(batches):
-        import numpy as np
-        import pandas as pd
-
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            raw = np.array(list(pdf[vec_col]), dtype=np.float64)
-            um = _np_unit_rounded(raw)
-            codes = np.zeros_like(um)
-            codes[:, nz] = np.floor(
-                (um[:, nz] - mn[nz]) / span[nz] * 255.0 + 0.5
-            )
-            u8 = codes.astype("uint8")
-            out = {
-                "vec_id": pdf[id_col].to_numpy(),
-                "codes": (
-                    [row.tobytes() for row in u8]
-                    if packed
-                    else list(u8.astype("int16"))
-                ),
-            }
-            if cents is not None:
-                # the ivf_build_index assignment: argmax rounded dot of
-                # the np-normalized vector, first-index = lowest list
-                m = raw / np.maximum(
-                    np.linalg.norm(raw, axis=1, keepdims=True), 1e-12
-                )
-                out["list_id"] = _nround(m @ cents.T).argmax(axis=1).astype("int32")
-            yield pd.DataFrame(out)
-
-    schema = (
-        "vec_id bigint, codes binary"
-        if packed
-        else "vec_id bigint, codes array<smallint>"
-    )
-    writer = (
-        embeddings.select(
-            F.col(id_col).cast("bigint").alias(id_col),
-            F.col(vec_col).cast("array<double>").alias(vec_col),
-        )
-        .mapInPandas(
-            encode,
-            schema=schema + (", list_id int" if cents is not None else ""),
-        )
-        .write.mode("overwrite")
-    )
-    if cents is not None:
-        writer = writer.partitionBy("list_id")
-    writer.parquet(f"{index_path}/codes")
-    return mn, mx
+    _build_index(embeddings, index_path, code, coarse, id_col, vec_col)
+    return code.mn, code.mx
 
 
 def _auto_rerank_budget(n_scanned: int, floor: int = 64) -> int:
     """The SHARED corpus-scaled exact-rerank budget of every quantized
     scan, parameterized by what the caller actually SCANS:
     ``max(floor, ceil(n/16))`` capped at 8192 (the executor-memory
-    bound). The floor is quantizer-specific: the PQ paths —
-    ``pq_topk`` AND ``pq_search`` — pass 128 because the coarse m-code
-    ADC genuinely needs the wider exact window (the r10 recall
-    regression), so the two resolve IDENTICAL budgets at the same
-    scanned count and their row-for-row parity holds at
-    ``rerank=None`` too; the SQ8 paths keep the 64 default (their
-    near-exact 8-bit ADC is budget-insensitive — the r13 sweep).
-    ``pq_search``/``sq8_search`` pass the PROBED codes count, so
-    composing with IVF keeps the budget bounded by the probed pool,
-    not the corpus."""
+    bound). The floor is quantizer-specific: the PQ paths pass 128
+    because the coarse m-code ADC needs the wider exact window, so
+    ``pq_topk`` and ``pq_search`` resolve IDENTICAL budgets at the same
+    scanned count; the SQ8 paths keep the 64 default (their near-exact
+    8-bit ADC is budget-insensitive). The searches pass the PROBED
+    codes count, so composing with IVF keeps the budget bounded by the
+    probed pool, not the corpus."""
     import math
 
     return max(floor, min(math.ceil(n_scanned / 16), 8192))
@@ -2043,174 +1573,35 @@ def sq8_search(
     """Search a materialized SQ8 index (:func:`sq8_build_index`): the
     candidate stage scans ONLY (vec_id, codes) — 8x less bandwidth
     than the float64 corpus — dequantizes per Arrow batch against the
-    broadcast minmax sidecar and heaps the global top-(k+rerank)
-    rounded dequantized dots per query. Survivors then re-rank EXACTLY
-    against ``embeddings`` (the float table), which is touched only
-    via a BROADCAST join on the |queries| x (k+rerank) candidate ids —
-    full-width vectors are read for candidates, never the corpus. The
-    exact re-rank runs JVM-side (codegen fold dot products), so the
-    whole search has exactly one Python stage: the byte scan.
+    minmax sidecar and heaps the global top-(k+rerank) rounded
+    dequantized dots per query. Survivors then re-rank EXACTLY against
+    ``embeddings`` (the float table), touched only via a BROADCAST join
+    on the |queries| x (k+rerank) candidate ids; the re-rank runs
+    JVM-side, so the whole search has exactly one Python stage: the
+    byte scan. Matches :func:`sq8_topk` row for row at the same
+    parameters.
 
     On an IVF-composed index (``sq8_build_index(n_lists=...)``) the
     probe set prunes BOTH axes: ``list_id IN (probes)`` is a partition
-    filter (non-probed directories never open, as in ``ivf_search``)
-    and what IS read is bytes — ``n_probe/n_lists`` of the files at an
-    eighth of the width. ``n_probe`` defaults to 4 there; probing
-    every list reproduces the flat-index answer exactly.
+    filter and what IS read is bytes. ``n_probe`` defaults to 4 there;
+    probing every list reproduces the flat-index answer exactly;
+    ``n_probe`` on an un-listed index raises.
 
-    ``rerank=None`` applies the PQ-style corpus-scaled budget
-    (``pq_topk``'s recipe, scoped to what this search actually scans):
-    ``max(64, ceil(n_scanned / 16))`` capped at 8192, where
-    ``n_scanned`` is the row count of the PROBED codes frame (the
-    partition-pruned scan — one cheap count of a codes-only read), so
-    the exact window grows with the candidate pool the way PQ's must.
-    Note the scan is pruned to the probe UNION across all queries: a
-    large diverse query batch can union every list, making
-    ``n_scanned`` the corpus — the budget follows what is READ, which
-    upper-bounds every query's own candidate pool.
-    Measured honestly (r13 sweep, SCALING.md): on this corpus SQ8's
-    8-bit ADC orders nearly exactly, so recall is INSENSITIVE to the
-    budget (32 vs 128 identical at every probe setting, 1x and 8x) —
-    the recall knob for the composed search is ``n_probe``
-    (4/16 -> 0.54, 8/16 -> 0.77, 10/16 -> 0.86-0.91, 12/16 -> 0.94
-    across sf0.001..sf0.1 and 8x). The auto budget is the guard rail
-    for corpora where per-dim quantization error is material (wider
-    dynamic range per dimension), not a recall lever here; a pinned
-    int keeps the call action-free and the oracle scale-stable.
-
-    Matches :func:`sq8_topk` row for row at the same parameters — the
-    codes are bit-identical by construction (property-pinned in
-    tests) and the exact re-rank IS the same code
-    (:func:`_adc_exact_rerank`), the way the physical IVF path equals
-    its logical twin.
+    ``rerank=None`` applies the corpus-scaled budget
+    (:func:`_auto_rerank_budget`, floor 64) over the row count of the
+    PROBED codes frame — the budget follows what is READ, which
+    upper-bounds every query's own candidate pool (a diverse query
+    batch can union every list). SCALING.md measured SQ8's recall as
+    insensitive to the budget on this corpus (the recall knob of the
+    composed search is ``n_probe``), so this is a guard rail for
+    corpora with wider per-dimension dynamic range; a pinned int keeps
+    the call action-free and the oracle scale-stable.
 
     CONTRACT: ``embeddings`` must be the SAME corpus the index was
-    built from (the rerank joins survivors back by id) — a drifted
-    float table silently re-scores candidates against different
-    vectors; rebuild the index when the corpus changes, exactly as
-    with ``ivf_build_index``.
+    built from (the rerank joins survivors back by id) — rebuild the
+    index when the corpus changes.
     """
-    import numpy as np
-
-    mm = _sidecar_rows(f"{index_path}/minmax")
-    dim = max(r["pos"] for r in mm) + 1
-    mn = np.zeros(dim, dtype=np.float64)
-    mx = np.zeros(dim, dtype=np.float64)
-    for r in mm:
-        mn[r["pos"]] = r["mn"]
-        mx[r["pos"]] = r["mx"]
-    scale = (mx - mn) / 255.0
-
-    qrows = (
-        queries.select(F.col(id_col), F.col(vec_col))
-        .limit(max_queries + 1)
-        .collect()
-    )
-    if len(qrows) > max_queries:
-        raise ValueError(
-            f"sq8_search: query set exceeds max_queries={max_queries}; "
-            "tighten the queries DataFrame or raise the cap deliberately"
-        )
-    if not qrows:
-        return spark.createDataFrame(
-            [], "vec_id bigint, rank int, neighbor_id bigint, cos_sim double"
-        )
-    q_ids = np.array([r[0] for r in qrows], dtype=np.int64)
-    qt = np.array([r[1] for r in qrows], dtype=np.float64)
-    qn = _np_unit_rounded(qt)
-
-    corpus = spark.read.parquet(f"{index_path}/codes")
-    q_probes = None
-    if "list_id" in corpus.columns:
-        # IVF-composed index: probe like ivf_search — per-query
-        # top-n_probe centroid lists (rounded dot, stable lowest-list
-        # ties), the probe UNION pushed as a partition filter so
-        # non-probed list directories never open
-        if n_probe is None:
-            n_probe = 4
-        cents = _read_centroid_sidecar(f"{index_path}/centroids")
-        qm = qt / np.maximum(np.linalg.norm(qt, axis=1, keepdims=True), 1e-12)
-        q_probes = np.argsort(
-            -_nround(qm @ cents.T), axis=1, kind="stable"
-        )[:, :n_probe]
-        probe_union = sorted({int(p) for row in q_probes for p in row})
-        corpus = corpus.filter(F.col("list_id").isin(probe_union))
-    elif n_probe is not None:
-        raise ValueError(
-            "sq8_search: n_probe given but the index has no list_id "
-            "partitions — rebuild with sq8_build_index(n_lists=...)"
-        )
-    if rerank is None:
-        # PQ-style corpus-scaled budget over what this search SCANS:
-        # the probed codes frame (partition-pruned, codes-only — the
-        # count never touches float vectors). See docstring for the
-        # measured honesty note: a guard rail here, not a recall lever.
-        rerank = _auto_rerank_budget(corpus.count())
-    keep = k + rerank
-
-    def score_partition(batches):
-        import heapq
-
-        import numpy as np
-        import pandas as pd
-
-        heaps = {int(qid): [] for qid in q_ids}
-        probe_sets = (
-            None if q_probes is None
-            else [set(map(int, row)) for row in q_probes]
-        )
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            cells = list(pdf["codes"])
-            if isinstance(cells[0], (bytes, bytearray)):  # packed layout
-                codes = np.frombuffer(
-                    b"".join(cells), dtype=np.uint8
-                ).reshape(len(cells), -1).astype(np.float64)
-            else:
-                codes = np.array(cells, dtype=np.float64)
-            deq = mn + codes * scale
-            nids = pdf["vec_id"].to_numpy()
-            lids = pdf["list_id"].to_numpy() if probe_sets is not None else None
-            adc_all = qn @ deq.T
-            adc_all = np.sign(adc_all) * np.floor(np.abs(adc_all) * 1e6 + 0.5) / 1e6
-            for qi, qid in enumerate(q_ids):
-                adc = adc_all[qi]
-                heap = heaps[int(qid)]
-                floor = heap[0][0] if len(heap) >= keep else -2.0
-                for ci in np.nonzero(adc >= floor)[0]:
-                    if lids is not None and int(lids[ci]) not in probe_sets[qi]:
-                        continue  # another query's probe, not this one's
-                    nid = int(nids[ci])
-                    if nid == qid:
-                        continue
-                    item = (float(adc[ci]), -nid)
-                    if len(heap) < keep:
-                        heapq.heappush(heap, item)
-                    elif item > heap[0]:
-                        heapq.heapreplace(heap, item)
-        out = [
-            (int(qid), -neg_nid, adc_r)
-            for qid, heap in heaps.items()
-            for adc_r, neg_nid in heap
-        ]
-        yield pd.DataFrame(
-            out, columns=["vec_id", "neighbor_id", "adc"]
-        ).astype(
-            {"vec_id": "int64", "neighbor_id": "int64", "adc": "float64"}
-        )
-
-    candidates = corpus.mapInPandas(
-        score_partition,
-        schema="vec_id bigint, neighbor_id bigint, adc double",
-    )
-    cand_cut = top_k_per_group(
-        candidates,
-        partition_by=["vec_id"],
-        order_by=[F.col("adc").desc(), F.col("neighbor_id").asc()],
-        k=keep,
-    )
-    return _adc_exact_rerank(
-        spark, cand_cut, qrows, embeddings, id_col, vec_col, k,
-        round_scale, cand_bound=len(qrows) * keep,
+    return _search(
+        spark, index_path, queries, embeddings, _SQ8Code, k, rerank, id_col,
+        vec_col, round_scale, max_queries, n_probe, "sq8_search",
     )

@@ -28,7 +28,6 @@ from ..llm.similarity import (
     cosine_topk_bruteforce,
     hard_negative_topk,
     hyperplane_lsh_topk,
-    ivf_topk,
     lsh_near_dup_pairs,
 )
 from ..llm.decontaminate import ngram_overlap
@@ -1623,6 +1622,26 @@ ann AS (SELECT vec_id, neighbor_id FROM (
     FROM ann_scored) WHERE rnk <= 5)"""
 
 
+def _indexed_recall_summary(spark, prefix, exact, build, search, recall_floor):
+    """The physical-index lifecycle of the graded ANN rows: build the
+    index into a unique per-invocation dir (``build(idx)``), search it
+    (``search(idx)``), and return the one-row recall summary against
+    ``exact`` LOCALIZED before the dir is deleted — parquet file
+    listings are captured eagerly, so a returned frame that still
+    referenced the index would break if a later rebuild (or a
+    concurrent driver on the same sf_dir) replaced the files."""
+    import shutil
+    import tempfile
+
+    idx = tempfile.mkdtemp(prefix=prefix)
+    try:
+        build(idx)
+        summary = ann_recall_summary(exact, search(idx), recall_floor=recall_floor)
+        return spark.createDataFrame(summary.collect(), schema=summary.schema)
+    finally:
+        shutil.rmtree(idx, ignore_errors=True)
+
+
 def _seed_unit_vectors(emb, n: int):
     """The n LOWEST-vec_id vectors, unit-normalized float64 — the
     deterministic, oracle-replayable seed set (an ordered take, so it is
@@ -1729,27 +1748,20 @@ def emb_rp_rerank_topk(spark, sf_dir):
               "is ~2.7x margin below that, wide because seed centroids quantize worse "
               "than k-means (whose pytest floor is 0.5)")
 def emb_ivf_topk(spark, sf_dir):
-    import shutil
-    import tempfile
-
     from ..llm.similarity import ivf_build_index, ivf_search
 
     emb = read_testdata(spark, sf_dir, "embeddings")
     exact = cosine_topk_bruteforce(emb, k=5, query_filter=F.col("vec_id") < 100)
-    # unique per-invocation index dir, and the one-row recall summary is
-    # materialized before the dir is deleted: parquet file listings are
-    # captured eagerly, so returning a frame that still references the
-    # index would break if a later rebuild (or a concurrent driver on
-    # the same sf_dir) replaced the files. Localizing one bounded row
-    # makes the returned frame independent of the index files entirely.
-    idx = tempfile.mkdtemp(prefix="ivf_index_")
-    try:
-        ivf_build_index(emb, idx, n_lists=16, centroids=_seed_unit_vectors(emb, 16))
-        ann = ivf_search(spark, idx, emb.filter(F.col("vec_id") < 100), k=5, n_probe=4)
-        summary = ann_recall_summary(exact, ann, recall_floor=0.2)
-        return spark.createDataFrame(summary.collect(), schema=summary.schema)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
+    return _indexed_recall_summary(
+        spark, "ivf_index_", exact,
+        lambda idx: ivf_build_index(
+            emb, idx, n_lists=16, centroids=_seed_unit_vectors(emb, 16)
+        ),
+        lambda idx: ivf_search(
+            spark, idx, emb.filter(F.col("vec_id") < 100), k=5, n_probe=4
+        ),
+        recall_floor=0.2,
+    )
 
 
 _NEAR_DUP_ORACLE = f"""
@@ -2623,28 +2635,21 @@ ann AS (SELECT vec_id, neighbor_id FROM (
               "sq8_search(rerank=None) offers the PQ-style corpus-scaled "
               "budget as the guard rail for wider-dynamic-range corpora")
 def emb_sq8_ivf_topk(spark, sf_dir):
-    import shutil
-    import tempfile
-
     from ..llm.similarity import sq8_build_index, sq8_search
 
     emb = read_testdata(spark, sf_dir, "embeddings")
     exact = cosine_topk_bruteforce(emb, k=5, query_filter=F.col("vec_id") < 100)
-    # emb_ivf_topk's index lifecycle: unique per-invocation dir, the
-    # one-row summary localized before the files are deleted
-    idx = tempfile.mkdtemp(prefix="sq8_ivf_index_")
-    try:
-        sq8_build_index(
+    return _indexed_recall_summary(
+        spark, "sq8_ivf_index_", exact,
+        lambda idx: sq8_build_index(
             emb, idx, n_lists=16, centroids=_seed_unit_vectors(emb, 16)
-        )
-        ann = sq8_search(
+        ),
+        lambda idx: sq8_search(
             spark, idx, emb.filter(F.col("vec_id") < 100), emb,
             k=5, rerank=64, n_probe=10,
-        )
-        summary = ann_recall_summary(exact, ann, recall_floor=0.8)
-        return spark.createDataFrame(summary.collect(), schema=summary.schema)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
+        ),
+        recall_floor=0.8,
+    )
 
 
 # IVF x PQ composed search (r14): the canonical IVFPQ layout (Jégou et
@@ -2743,36 +2748,29 @@ ann AS (SELECT vec_id, neighbor_id FROM (
               "(corpus-scaled, floor 128) rises to 0.824 — production "
               "composes the auto budget (SCALING.md r14)")
 def emb_pq_ivf_topk(spark, sf_dir):
-    import shutil
-    import tempfile
-
     import numpy as np
 
-    from ..llm.similarity import ann_recall_summary, pq_build_index, pq_search
+    from ..llm.similarity import pq_build_index, pq_search
 
     emb = read_testdata(spark, sf_dir, "embeddings")
     exact = cosine_topk_bruteforce(emb, k=5, query_filter=F.col("vec_id") < 100)
     u = _seed_unit_vectors(emb, 32)
     books = np.stack([u[:, j * 8:(j + 1) * 8] for j in range(8)])
-    # emb_sq8_ivf_topk's index lifecycle: unique per-invocation dir,
-    # the one-row summary localized before the files are deleted
-    idx = tempfile.mkdtemp(prefix="pq_ivf_index_")
-    try:
-        pq_build_index(
+    return _indexed_recall_summary(
+        spark, "pq_ivf_index_", exact,
+        lambda idx: pq_build_index(
             emb, idx, m=8, ksub=32, books=books,
             # the 16 coarse centroids ARE the first 16 of the 32 seed
             # unit vectors already collected above — no second
             # ordered-take job
             n_lists=16, centroids=u[:16],
-        )
-        ann = pq_search(
+        ),
+        lambda idx: pq_search(
             spark, idx, emb.filter(F.col("vec_id") < 100), emb,
             k=5, rerank=256, n_probe=10,
-        )
-        summary = ann_recall_summary(exact, ann, recall_floor=0.6)
-        return spark.createDataFrame(summary.collect(), schema=summary.schema)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
+        ),
+        recall_floor=0.6,
+    )
 
 
 # --- iterative clustering (r11): seeded Lloyd k-means + SemDeDup -------------
@@ -2998,9 +2996,6 @@ ann AS (SELECT vec_id, neighbor_id FROM (
               "normalization, assignment, probing, scoring AND the exact twin in "
               "DuckDB — iterative refinement composed end-to-end with the ANN index")
 def emb_ivf_kmeans_topk(spark, sf_dir):
-    import shutil
-    import tempfile
-
     import numpy as np
 
     from ..llm.clustering import kmeans_fit
@@ -3010,16 +3005,14 @@ def emb_ivf_kmeans_topk(spark, sf_dir):
     exact = cosine_topk_bruteforce(emb, k=5, query_filter=F.col("vec_id") < 100)
     km = kmeans_fit(emb, k=16, n_iter=2)
     km = km / np.maximum(np.linalg.norm(km, axis=1, keepdims=True), 1e-12)
-    idx = tempfile.mkdtemp(prefix="ivf_km_index_")
-    try:
-        ivf_build_index(emb, idx, n_lists=16, centroids=km)
-        ann = ivf_search(spark, idx, emb.filter(F.col("vec_id") < 100), k=5, n_probe=4)
-        summary = ann_recall_summary(exact, ann, recall_floor=0.3)
-        # localize the one-row summary before deleting the index files
-        # (the emb_ivf_topk precedent: parquet listings capture eagerly)
-        return spark.createDataFrame(summary.collect(), schema=summary.schema)
-    finally:
-        shutil.rmtree(idx, ignore_errors=True)
+    return _indexed_recall_summary(
+        spark, "ivf_km_index_", exact,
+        lambda idx: ivf_build_index(emb, idx, n_lists=16, centroids=km),
+        lambda idx: ivf_search(
+            spark, idx, emb.filter(F.col("vec_id") < 100), k=5, n_probe=4
+        ),
+        recall_floor=0.3,
+    )
 
 
 _GIF_FRAMES_ORACLE = """

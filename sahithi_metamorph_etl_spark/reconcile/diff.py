@@ -114,7 +114,12 @@ def diff(
     column_mismatches = all_cols.crossJoin(_one(common, "__common")).select(
         "column_name",
         "n_mismatch",
-        dround(F.col("n_mismatch") * 100.0 / F.col("__common"), 4).alias("pct_of_common"),
+        # NULL (not DIVIDE_BY_ZERO under ANSI) when the sides share no key
+        dround(
+            F.col("n_mismatch") * 100.0
+            / F.when(F.col("__common") != 0, F.col("__common")),
+            4,
+        ).alias("pct_of_common"),
     )
 
     source_only = source.join(target.select(*keys), keys, "left_anti")

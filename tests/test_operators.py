@@ -137,6 +137,15 @@ def test_diff_detects_cells_and_extras(spark):
     assert col == {"s": 1, "v": 0}
 
 
+def test_diff_disjoint_keys_column_mismatches_null_pct(spark):
+    """No common key: pct_of_common is NULL, not a DIVIDE_BY_ZERO
+    under ANSI."""
+    src = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "s"])
+    tgt = spark.createDataFrame([(3, "a"), (4, "b")], ["k", "s"])
+    rows = diff(src, tgt, keys=["k"]).column_mismatches.collect()
+    assert [tuple(r) for r in rows] == [("s", 0, None)]
+
+
 def test_diff_null_safety(spark):
     schema = "k int, x string"
     src = spark.createDataFrame([(1, None), (2, "x")], schema)
@@ -303,6 +312,24 @@ def test_jaccard_pairs_threshold_validation_and_release(spark, sf_dir):
     }
     release.release()
     release.release()  # idempotent
+
+
+@pytest.mark.parametrize("bad", [0.0, -0.1, 1.5])
+@pytest.mark.parametrize("op", ["neardup_against_seen", "minhash_lsh_pairs"])
+def test_minhash_threshold_outside_unit_interval_raises(spark, sf_dir, op, bad):
+    from sahithi_metamorph_etl_spark.llm.dedup import (
+        band_signature_store,
+        neardup_against_seen,
+    )
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    with pytest.raises(ValueError, match=r"threshold must be in \(0, 1\]"):
+        if op == "minhash_lsh_pairs":
+            minhash_lsh_pairs(docs, threshold=bad)
+        else:
+            neardup_against_seen(
+                docs, band_signature_store(docs), docs, threshold=bad
+            )
 
 
 def test_containment_pairs_matches_naive_and_catches_subdocs(spark):
@@ -2925,13 +2952,6 @@ def test_sq8_physical_index_matches_flat_scan(spark, sf_dir, tmp_path):
     )
     assert du(f"{idx}/codes") < emb_bytes / 3
 
-    # the unpacked array<smallint> layout decodes to the same answer
-    # (sq8_search auto-detects the cell type)
-    idx2 = str(tmp_path / "sq8_idx_unpacked")
-    sq8_build_index(emb, idx2, packed=False)
-    srch2 = sq8_search(spark, idx2, emb.filter(qf), emb, k=5, rerank=32)
-    assert sorted(map(tuple, srch2.collect())) == sorted(map(tuple, flat.collect()))
-
     # empty query set: typed empty frame, no job
     none = sq8_search(spark, idx, emb.filter(F.col("vec_id") < 0), emb)
     assert none.count() == 0
@@ -3830,7 +3850,12 @@ def test_sidecar_local_path_contract(tmp_path):
 
     assert _local_sidecar_path("/tmp/x/centroids") == "/tmp/x/centroids"
     assert _local_sidecar_path("file:///tmp/x/c") == "/tmp/x/c"
-    for bad in ("hdfs://nn/idx/centroids", "s3a://bucket/idx/minmax"):
+    assert _local_sidecar_path("file:/tmp/x/c") == "/tmp/x/c"
+    assert _local_sidecar_path("file://localhost/tmp/x/c") == "/tmp/x/c"
+    for bad in (
+        "hdfs://nn/idx/centroids", "s3a://bucket/idx/minmax",
+        "file://otherhost/tmp/x/c", "hdfs:/idx/centroids", "s3a:/bucket/idx",
+    ):
         with _pytest.raises(ValueError, match="driver-local"):
             _local_sidecar_path(bad)
 
